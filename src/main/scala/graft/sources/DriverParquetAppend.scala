@@ -35,10 +35,10 @@ import org.apache.spark.sql.types.StructType
   * checkpoints only after this returns, and the X5 pre-kernel dedup
   * absorbs re-delivery.
   *
-  * ONLY for driver-resident rows: the data-sized overflow regime keeps
-  * the distributed [[Sinks.appendPartitioned]] path (its rows live on
-  * executors; collecting them to write here would invert the scale
-  * contract).
+  * ONLY for driver-resident rows: data-sized loads (history backfills)
+  * keep the distributed [[Sinks.appendPartitioned]] path (their rows
+  * live on executors; collecting them to write here would invert the
+  * scale contract).
   */
 object DriverParquetAppend {
 

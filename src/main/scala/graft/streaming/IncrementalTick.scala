@@ -24,23 +24,17 @@ import graft.sources.{DriverParquetAppend, Sinks}
   * The SINK is always the source of truth; the per-series tail is the
   * tick's memo of its own appends (valid because the tick is the sink's
   * only writer — the K1 contract), seeded and re-seeded from the sink,
-  * so recovery = re-reading the sink tail, exactly as before. Two tail
-  * SHAPES, the q_j1b map-side/shuffle dual (r16, VERDICT r15 next #6 —
-  * the per-batch sink scan + its scheduling was 88% of tick time):
-  *
-  *  - DRIVER-RESIDENT (the reference's actual regime: symbol-count
-  *    series, candle-sized batches): the tail lives as plain rows on
-  *    the driver while (tail + batch) stays under
-  *    [[TickDriverTailMaxRows]]; since r17 the kernel pack ALSO runs
-  *    on the driver (SeriesKernels.runSequential — the same state
-  *    machine applyKernels runs on executors), so a steady-state tick
-  *    is collect-the-batch plus ONE small append job with no exchange.
-  *    No sink read, no shuffle of history, no per-use broadcast builds.
-  *  - EXECUTOR DATAFRAME (high-cardinality series / data-sized
-  *    batches): the tail is a persisted, localCheckpoint-truncated
-  *    DataFrame null-safe-maintained on executors; seeds and unions
-  *    happen as plans. Entered automatically when a batch or seed
-  *    overflows the driver budget; never downgrades back mid-stream.
+  * so recovery = re-reading the sink tail, exactly as before. The tail
+  * is DRIVER-RESIDENT (the reference's regime: symbol-count series,
+  * candle-sized batches — the per-batch sink scan + its scheduling was
+  * 88% of tick time before it, r16): plain rows per series, and the
+  * kernel pack runs on the driver too (SeriesKernels.runSequential —
+  * the same state machine applyKernels runs on executors), so a
+  * steady-state tick is collect-the-batch plus one driver-side parquet
+  * append. No sink read, no shuffle of history, no broadcast builds.
+  * A batch or seed read over [[TickDriverTailMaxRows]] is refused
+  * before anything is written: cap the source's per-trigger input, or
+  * load history in batch through [[enrich]] + `Sinks.appendPartitioned`.
   *
   * Scale: the seed read mirrors the reference's Flux
   * `range(start: last_ts − 298h)` (btc_usdt_etl_dag.py:77-92) — a TIME
@@ -58,10 +52,10 @@ object IncrementalTick {
 
   val Lookback = 299
 
-  /** Driver-tail budget: the map-side/shuffle switch (the q_j1b
-    * StarMapSideMaxOrders precedent). ~100 B/row ⇒ ~100 MB of driver
-    * heap at the cap; the reference regime (tens of symbols × 299 rows)
-    * sits four orders of magnitude below it. */
+  /** Driver-tail input budget: the most rows one batch, or one sink
+    * seed read, may bring onto the driver. ~100 B/row ⇒ ~100 MB of
+    * driver heap at the cap; the reference regime (tens of symbols ×
+    * 299 rows) sits four orders of magnitude below it. */
   val TickDriverTailMaxRows: Int = 1 << 20
 
   /** Driver-side wall-time accounting across [[processBatch]] calls,
@@ -75,15 +69,14 @@ object IncrementalTick {
   object Phases {
     val probeNanos = new java.util.concurrent.atomic.AtomicLong(0L)
     val appendNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    def reset(): Unit = { probeNanos.set(0L); appendNanos.set(0L); batches.set(0) }
+    def reset(): Unit = { probeNanos.set(0L); appendNanos.set(0L) }
     def probeSec: Double = probeNanos.get / 1e9
     def appendSec: Double = appendNanos.get / 1e9
   }
 
   /** The X2 frame pack — the SINGLE source of truth for both execution
     * sites (the distributed [[enrich]] plan and the driver-resident
-    * fast path in [[runLocal]], which feeds the same specs through
+    * tick in [[processBatch]], which feeds the same specs through
     * [[graft.operators.SeriesKernels.runSequential]]). */
   private def kernelSpecs: Seq[graft.operators.SeriesKernels.KernelSpec] = {
     import graft.operators.{DecFrameKernels, SeriesKernels}
@@ -139,7 +132,8 @@ object IncrementalTick {
   }
 
   /** A slice guaranteed to cover each seed series' [[Lookback]]-row
-    * tail: starts at `lookbackHours` and DOUBLES the window until every
+    * tail: starts at [[Lookback]] hours (the reference's 299 hourly
+    * candles) and DOUBLES the window until every
     * series in `newSeries` has ≥ Lookback sink rows inside it, or the
     * window reaches the sink's oldest `day` partition (then the slice IS
     * the series' whole history and the row cap binds exactly as the
@@ -155,9 +149,8 @@ object IncrementalTick {
       sinkPath: String,
       newSeries: DataFrame,
       minNewTsNs: Long,
-      lookbackHours: Long,
       minDay: Option[String]): DataFrame = {
-    var hours = lookbackHours
+    var hours = Lookback.toLong
     var rounds = 0
     while (rounds < 64) {
       val slice = prunedSlice(spark, sinkPath, minNewTsNs, hours)
@@ -179,7 +172,7 @@ object IncrementalTick {
     }
     throw new IllegalStateException(
       s"coveredSlice: window did not converge after $rounds doublings " +
-        s"(sink=$sinkPath, start=$lookbackHours h) — sink partition layout " +
+        s"(sink=$sinkPath, start=$Lookback h) — sink partition layout " +
         "is inconsistent with its row timestamps")
   }
 
@@ -193,93 +186,22 @@ object IncrementalTick {
       .select(InputCols.map(col): _*)
   }
 
-  /** Maintained tail state, keyed by (session, sinkPath). */
-  private sealed trait TailState
-  private final case class LocalTail(byUser: Map[Any, Vector[Row]]) extends TailState
-  private final case class DfTail(df: DataFrame) extends TailState
-
+  /** Maintained driver-resident tails, keyed by (session, sinkPath):
+    * the newest ≤ [[Lookback]] rows per series, ascending
+    * (ts_ns, event_id). */
   private val tailCache =
-    new java.util.LinkedHashMap[(String, String), TailState](16, 0.75f, true) {
-      override def removeEldestEntry(
-          eldest: java.util.Map.Entry[(String, String), TailState]): Boolean = {
-        val evict = size() > 64
-        if (evict) eldest.getValue match {
-          case DfTail(df) => df.unpersist()
-          case _          => ()
-        }
-        evict
-      }
+    new java.util.LinkedHashMap[(String, String), Map[Any, Vector[Row]]](
+        16, 0.75f, true) {
+      override def removeEldestEntry(eldest: java.util.Map.Entry[
+          (String, String), Map[Any, Vector[Row]]]): Boolean = size() > 64
     }
 
   /** Test/ops hook: drop the maintained tail for `sinkPath` (all
     * sessions), forcing the next tick to re-seed from the sink. */
   private[graft] def invalidateTail(sinkPath: String): Unit =
     tailCache.synchronized {
-      val it = tailCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._2 == sinkPath) {
-          e.getValue match { case DfTail(df) => df.unpersist(); case _ => () }
-          it.remove()
-        }
-      }
+      tailCache.keySet.removeIf(_._2 == sinkPath)
     }
-
-  /** One foreachBatch body: merge `newRows` (schema: event_id, ts,
-    * ts_ns, user_id, value) into the sink at `sinkPath`.
-    *
-    * `lookbackHours` seeds the tail's time window (reference: 299
-    * hourly candles ⇒ 299 h); [[coveredSlice]] widens it automatically
-    * for series sparser than hourly, so tick-vs-batch parity holds at
-    * ANY series cadence. Only a missing sink path reads as "no
-    * history" (first tick); any other read failure propagates so the
-    * micro-batch retries instead of appending rows computed without
-    * lookback (ADVICE r2).
-    *
-    * X5 idempotence: rows whose `event_id` already exists in the
-    * lookback tail are dropped before the kernel pass, so re-running a
-    * delivered batch (task retry, at-least-once upstream) is a no-op
-    * instead of a double-append.
-    *
-    * `appendFiles` coarsens the append granularity: a tick emits one
-    * row per new event of the touched series — writing that through
-    * all shuffle.partitions tasks costs a many-file commit per batch
-    * AND makes every later seed read list/open those shards. One file
-    * per day per tick matches the reference's append cadence; it is the
-    * FLOOR — the executor-DataFrame shape scales the fan-out
-    * automatically from the measured batch row count
-    * ([[TickAppendRowsPerFile]]), so a data-sized tick never funnels
-    * through one task even on the automatic overflow handoff.
-    */
-  def processBatch(spark: SparkSession, newRows: DataFrame, sinkPath: String,
-      lookbackHours: Long = Lookback.toLong,
-      appendFiles: Int = 1): Unit = {
-    val nr = newRows.select(InputCols.map(col): _*)
-    val key = (graft.GraftSession.sessionUuid(spark), sinkPath)
-    tailCache.synchronized(Option(tailCache.get(key))) match {
-      case Some(DfTail(df))   => runDf(spark, nr, sinkPath, lookbackHours,
-        appendFiles, key, Some(df))
-      case Some(LocalTail(m)) => runLocal(spark, nr, sinkPath, lookbackHours,
-        appendFiles, key, m)
-      case None               => runLocal(spark, nr, sinkPath, lookbackHours,
-        appendFiles, key, Map.empty)
-    }
-  }
-
-  /** Test hook: run a batch through the executor-DataFrame tail shape
-    * unconditionally (small corpora otherwise always take the
-    * driver-resident path, leaving the scale shape spec-untested). */
-  private[graft] def processBatchForceDf(spark: SparkSession,
-      newRows: DataFrame, sinkPath: String,
-      lookbackHours: Long = Lookback.toLong): Unit = {
-    val nr = newRows.select(InputCols.map(col): _*)
-    val key = (graft.GraftSession.sessionUuid(spark), sinkPath)
-    val cached = tailCache.synchronized(Option(tailCache.get(key))) match {
-      case Some(DfTail(df)) => Some(df)
-      case _                => None
-    }
-    runDf(spark, nr, sinkPath, lookbackHours, appendFiles = 1, key, cached)
-  }
 
   /** Sink metadata for the seed path: None = sink path missing (first
     * tick, "no history"); Some(minDay) = oldest day partition. */
@@ -296,27 +218,50 @@ object IncrementalTick {
     }
   }
 
-  // ---------------------------------------------------------------- //
-  // Driver-resident tail: the reference regime. Steady state is two   //
-  // Spark jobs per tick — collect the batch, one LocalRelation →      //
-  // kernel → append job.                                              //
-  // ---------------------------------------------------------------- //
-  private def runLocal(spark: SparkSession, nr: DataFrame, sinkPath: String,
-      lookbackHours: Long, appendFiles: Int,
-      key: (String, String), tail0: Map[Any, Vector[Row]]): Unit = {
+  /** Collects at most [[TickDriverTailMaxRows]] rows of `df`, or raises
+    * (naming the budget and the remedy) if it holds more. */
+  private def collectWithinBudget(df: DataFrame, what: String,
+      sinkPath: String): Array[Row] = {
+    val rows = df.take(TickDriverTailMaxRows + 1)
+    if (rows.length > TickDriverTailMaxRows)
+      throw new IllegalArgumentException(
+        s"IncrementalTick: $what for sink $sinkPath holds more than " +
+          s"TickDriverTailMaxRows = $TickDriverTailMaxRows rows, the " +
+          "driver-resident tail budget; nothing was written. Cap the " +
+          "source's per-trigger input (e.g. maxFilesPerTrigger), or load " +
+          "history in batch with IncrementalTick.enrich plus " +
+          "Sinks.appendPartitioned.")
+    rows
+  }
+
+  /** One foreachBatch body: merge `newRows` (schema: event_id, ts,
+    * ts_ns, user_id, value) into the sink at `sinkPath`.
+    *
+    * Series the tail doesn't hold yet are seeded from the sink over a
+    * [[Lookback]]-hour window; [[coveredSlice]] widens it automatically
+    * for series sparser than hourly, so tick-vs-batch parity holds at
+    * ANY series cadence. Only a missing sink path reads as "no
+    * history" (first tick); any other read failure propagates so the
+    * micro-batch retries instead of appending rows computed without
+    * lookback (ADVICE r2).
+    *
+    * X5 idempotence: rows whose `event_id` already exists in the
+    * lookback tail are dropped before the kernel pass, so re-running a
+    * delivered batch (task retry, at-least-once upstream) is a no-op
+    * instead of a double-append.
+    *
+    * Steady state is one Spark job per tick (collect the batch) plus a
+    * driver-side append of one file per day touched. A batch or seed
+    * read over [[TickDriverTailMaxRows]] throws before anything is
+    * written.
+    */
+  def processBatch(spark: SparkSession, newRows: DataFrame,
+      sinkPath: String): Unit = {
+    val nr = newRows.select(InputCols.map(col): _*)
+    val key = (graft.GraftSession.sessionUuid(spark), sinkPath)
     val probeT0 = System.nanoTime()
-    val batchRows = nr.take(TickDriverTailMaxRows + 1)
+    val batchRows = collectWithinBudget(nr, "the micro-batch", sinkPath)
     if (batchRows.isEmpty) return // X4: empty micro-batch no-op
-    if (batchRows.length > TickDriverTailMaxRows) {
-      // data-sized batch: hand the whole stream over to the executor
-      // DataFrame shape (the driver tail is discardable — the sink has
-      // everything the cache had, because the tick appends before
-      // caching)
-      tailCache.synchronized(tailCache.remove(key))
-      Phases.probeNanos.addAndGet(System.nanoTime() - probeT0)
-      runDf(spark, nr, sinkPath, lookbackHours, appendFiles, key, None)
-      return
-    }
     val schema = nr.schema
     val ui = schema.fieldIndex("user_id")
     val ti = schema.fieldIndex("ts_ns")
@@ -326,7 +271,8 @@ object IncrementalTick {
 
     // seed series the tail doesn't hold yet (cold start, restart, or a
     // symbol first seen by this stream) from the sink
-    var tail = tail0
+    var tail = tailCache.synchronized(Option(tailCache.get(key)))
+      .getOrElse(Map.empty[Any, Vector[Row]])
     val missing = batchSeries -- tail.keySet
     if (missing.nonEmpty) {
       sinkMinDay(spark, sinkPath) match {
@@ -335,18 +281,10 @@ object IncrementalTick {
           val msDf = spark.createDataFrame(
             java.util.Arrays.asList(missing.toSeq.map(Row(_)): _*),
             StructType(Seq(schema("user_id"))))
-          val seedRows = rowCap(
-            coveredSlice(spark, sinkPath, msDf, minNewTsNs, lookbackHours,
-              minDay)
-              .join(broadcast(msDf), Seq("user_id"), "leftsemi"))
-            .take(TickDriverTailMaxRows + 1)
-          if (seedRows.length > TickDriverTailMaxRows) {
-            // too many series for the driver shape: switch to DataFrame
-            tailCache.synchronized(tailCache.remove(key))
-            Phases.probeNanos.addAndGet(System.nanoTime() - probeT0)
-            runDf(spark, nr, sinkPath, lookbackHours, appendFiles, key, None)
-            return
-          }
+          val seedRows = collectWithinBudget(rowCap(
+            coveredSlice(spark, sinkPath, msDf, minNewTsNs, minDay)
+              .join(broadcast(msDf), Seq("user_id"), "leftsemi")),
+            "the sink seed read", sinkPath)
           tail = tail ++ seedRows.groupBy(_.get(ui)).view.mapValues(rs =>
             rs.sortBy(r => (r.getLong(ti), r.getLong(ei))).toVector)
       }
@@ -365,11 +303,9 @@ object IncrementalTick {
       // SeriesKernels.runSequential here (the SAME state machine
       // applyKernels runs on executors, same specs via [[kernelSpecs]])
       // removes the per-tick LocalRelation → exchange(user_id) →
-      // kernel → exchange(appendFiles) job whose scheduling and plan
-      // cost dominated tick_append_sec. The ONLY Spark job left in a
-      // steady-state tick is the appendFiles-task parquet append of the
-      // new rows. Kernel input stays pruned to the series the batch
-      // TOUCHES (btc_usdt_etl_dag.py:55-106); bit-parity with the
+      // kernel → exchange job whose scheduling and plan cost dominated
+      // tick_append_sec. Kernel input stays pruned to the series the
+      // batch TOUCHES (btc_usdt_etl_dag.py:55-106); bit-parity with the
       // distributed path is by shared implementation, pinned end-to-end
       // by IncrementalTickSpec's ticked-sink == batch-recompute gates.
       import graft.operators.SeriesKernels
@@ -427,140 +363,14 @@ object IncrementalTick {
         u -> merged.takeRight(Lookback)
       }
     }
-    tailCache.synchronized(tailCache.put(key, LocalTail(tail)))
+    tailCache.synchronized(tailCache.put(key, tail))
     Phases.appendNanos.addAndGet(System.nanoTime() - appendT0)
-    Phases.batches.incrementAndGet()
-  }
-
-  // ---------------------------------------------------------------- //
-  // Executor DataFrame tail: high-cardinality series / data-sized     //
-  // batches. Everything stays distributed; the carried tail never     //
-  // lands on the driver (the ChunkedKernels r16 contract).            //
-  // ---------------------------------------------------------------- //
-  private[graft] def runDf(spark: SparkSession, nr: DataFrame,
-      sinkPath: String, lookbackHours: Long, appendFiles: Int,
-      key: (String, String), cached: Option[DataFrame]): Unit =
-    try {
-      runDfBody(spark, nr, sinkPath, lookbackHours, appendFiles, key, cached)
-    } catch {
-      case e: Throwable =>
-        // the DfTail lives in NON-reliable localCheckpoint blocks: if an
-        // executor holding them died, every action against the stale
-        // handle fails — and would keep failing on each micro-batch
-        // retry until JVM restart. Dropping the tail here makes the
-        // docstring's recovery contract ("recovery = re-reading the
-        // sink tail") automatic: the foreachBatch retry re-seeds from
-        // the sink, and the X5 pre-kernel guard keeps the retry
-        // idempotent. (ADVICE r16; the manual invalidateTail hook and
-        // its mid-stream cache-death spec stay.)
-        invalidateTail(sinkPath)
-        throw e
-    }
-
-  /** Target rows per append file when a batch is data-sized: the
-    * automatic overflow handoff from the driver shape arrives with the
-    * caller's driver-regime `appendFiles` (default 1), which would push
-    * the whole tick output through one task (ADVICE r16). ~100 B/row ⇒
-    * ~100 MB parquet per file at this target. */
-  val TickAppendRowsPerFile: Long = 1L << 20
-
-  private def runDfBody(spark: SparkSession, nr: DataFrame,
-      sinkPath: String, lookbackHours: Long, appendFiles: Int,
-      key: (String, String), cached: Option[DataFrame]): Unit = {
-    val probeT0 = System.nanoTime()
-    // ONE aggregation job yields emptiness (X4), the min new ts AND the
-    // touched-series set. Driver-bounded by the batch's distinct series
-    // — the same bound a broadcast() build already imposes.
-    val stats = nr.groupBy(col("user_id"))
-      .agg(min(col("ts_ns")).as("__mn"), count(lit(1)).as("__n")).collect()
-    if (stats.isEmpty) return // X4: empty micro-batch no-op
-    val minNewTsNs = stats.iterator.map(_.getLong(1)).min
-    // scale the append fan-out with the MEASURED batch size so the
-    // data-sized overflow handoff never funnels through the caller's
-    // driver-regime default (ADVICE r16); the caller's value stays the
-    // floor, 256 caps the commit at a sane file count
-    val batchRowCount = stats.iterator.map(_.getLong(2)).sum
-    val effAppendFiles = math.max(appendFiles, math.min(256L,
-      (batchRowCount + TickAppendRowsPerFile - 1) / TickAppendRowsPerFile).toInt)
-    // the touched-series set as a LocalRelation: broadcast joins against
-    // it build driver-side with NO Spark job
-    val newSeries = spark.createDataFrame(
-      java.util.Arrays.asList(stats.map(r => Row(r.get(0))): _*),
-      StructType(Seq(nr.schema("user_id"))))
-    // series the maintained tail cannot serve → sink seed (executor-side
-    // set difference — never a driver-side series set)
-    val seedSeries: Option[DataFrame] = cached match {
-      case None => Some(newSeries)
-      case Some(t) =>
-        val missing = newSeries.except(t.select("user_id").distinct())
-        if (missing.isEmpty) None else Some(missing)
-    }
-    val seeded: Option[DataFrame] = seedSeries.flatMap { ms =>
-      sinkMinDay(spark, sinkPath).map { minDay =>
-        rowCap(coveredSlice(spark, sinkPath, ms, minNewTsNs, lookbackHours,
-          minDay)
-          .join(broadcast(ms), Seq("user_id"), "leftsemi"))
-      }
-    }
-    Phases.probeNanos.addAndGet(System.nanoTime() - probeT0)
-    val appendT0 = System.nanoTime()
-    val tailRelevant: Option[DataFrame] =
-      (cached.map(_.join(broadcast(newSeries), Seq("user_id"), "leftsemi")),
-        seeded) match {
-        case (Some(c), Some(sd)) => Some(c.unionByName(sd))
-        case (Some(c), None)     => Some(c)
-        case (None, sd)          => sd
-      }
-    // X5: drop re-delivered rows (event_id already in the lookback
-    // tail) BEFORE the kernel pass, mirroring runLocal's seenIds filter
-    // (ADVICE r16): a duplicate entering the union twice — once from
-    // the tail as history, once as __new — would shift the frames of
-    // every co-batched new row of that series. AQE broadcasts the
-    // bounded tail side when small; the anti-join is the idempotence
-    // price of an at-least-once source.
-    val fresh = tailRelevant match {
-      case None    => nr
-      case Some(t) => nr.join(t.select(col("event_id").as("__seen")),
-        col("event_id") === col("__seen"), "left_anti")
-    }
-    // provenance flag instead of a newest-row semi-join: only rows that
-    // arrived in THIS batch leave the kernel pass — no key broadcast,
-    // no join
-    val union = tailRelevant match {
-      case None    => fresh.withColumn("__new", lit(true))
-      case Some(t) => t.withColumn("__new", lit(false))
-        .unionByName(fresh.withColumn("__new", lit(true)))
-    }
-    val out = enrich(union).filter(col("__new")).drop("__new")
-    // repartition, NOT coalesce: coalesce(1) folds the whole enrich
-    // stage into one task (measured 2s/batch single-threaded kernels);
-    // the tiny output exchange keeps the kernel pass parallel
-    Sinks.appendPartitioned(out.repartition(effAppendFiles), "ts", sinkPath)
-    // maintain the tail: newest ≤ Lookback rows per touched series
-    // (event_id-deduped — a re-delivered row must not enter twice and
-    // shift later frames), untouched series keep theirs. localCheckpoint
-    // (eager) both materializes the new tail BEFORE the old one is
-    // unpersisted and truncates the plan — without it each batch nests
-    // the previous tail's lineage and analyzer cost grows per tick.
-    val touchedTail = rowCap(tailRelevant match {
-      case None    => fresh
-      case Some(t) => t.unionByName(fresh).dropDuplicates("event_id")
-    })
-    val newTail = (cached.map(_.join(
-        broadcast(newSeries), Seq("user_id"), "left_anti")).toSeq :+ touchedTail)
-      .reduce(_ unionByName _)
-      .localCheckpoint()
-    tailCache.synchronized(tailCache.put(key, DfTail(newTail)))
-    cached.foreach(_.unpersist())
-    Phases.appendNanos.addAndGet(System.nanoTime() - appendT0)
-    Phases.batches.incrementAndGet()
   }
 
   /** Drives a sequence of micro-batches (driver-sequenced, the
     * Trigger.ProcessingTime analog for tests/backfills). */
-  def run(spark: SparkSession, batches: Seq[DataFrame], sinkPath: String,
-      lookbackHours: Long = Lookback.toLong): Unit =
-    batches.foreach(b => processBatch(spark, b, sinkPath, lookbackHours))
+  def run(spark: SparkSession, batches: Seq[DataFrame], sinkPath: String): Unit =
+    batches.foreach(b => processBatch(spark, b, sinkPath))
 
   /** The production entry point: attaches [[processBatch]] as the
     * foreachBatch body of a streaming source (file dir, Kafka, rate…)
@@ -572,13 +382,12 @@ object IncrementalTick {
       source: DataFrame,
       sinkPath: String,
       checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger,
-      lookbackHours: Long = Lookback.toLong)
+      trigger: org.apache.spark.sql.streaming.Trigger)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(source.isStreaming, "startStream needs a streaming DataFrame")
     source.writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        processBatch(df.sparkSession, df.toDF(), sinkPath, lookbackHours)
+        processBatch(df.sparkSession, df.toDF(), sinkPath)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -46,12 +46,14 @@ final class RamCheckpointFileManager(root: Path, conf: Configuration)
       override def cancel(): Unit = { done = true }
       override def close(): Unit = {
         if (!done) {
-          super.close()
-          if (!overwriteIfPossible && files.containsKey(key))
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(key)
-          files.put(key, buf.toByteArray)
-          mkdirsKey(parentOf(key))
           done = true
+          super.close()
+          // one atomic check-and-insert: two writers racing on the same
+          // path without overwrite must not both succeed
+          if (overwriteIfPossible) files.put(key, buf.toByteArray)
+          else if (files.putIfAbsent(key, buf.toByteArray) != null)
+            throw new org.apache.hadoop.fs.FileAlreadyExistsException(key)
+          mkdirsKey(parentOf(key))
         }
       }
     }

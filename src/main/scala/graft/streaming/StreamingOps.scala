@@ -168,16 +168,11 @@ object StreamingOps {
     // nothing). The gates' checkpoints are throwaway by construction
     // (two-phase MemoryStream feed, dropped after the query), so they
     // live in a JVM map; the production file-source probe keeps the
-    // durable default. Opt-out: SPARK_GRAFT_GATE_RAM_CKPT=0.
-    if (ramCkptEnabled)
-      ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        classOf[RamCheckpointFileManager].getName)
+    // durable default.
+    ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[RamCheckpointFileManager].getName)
     ss
   }
-
-  private def ramCkptEnabled: Boolean =
-    !Set("0", "false", "no", "off").contains(
-      sys.env.getOrElse("SPARK_GRAFT_GATE_RAM_CKPT", "1").trim.toLowerCase)
 
   /** Fresh throwaway checkpoint root for one gate query (a unique path
     * string — with the RAM manager nothing is ever created on disk). */

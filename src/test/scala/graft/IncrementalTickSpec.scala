@@ -92,53 +92,13 @@ class IncrementalTickSpec extends AnyFunSuite {
     assert(mismatch.isEmpty)
   }
 
-  test("X2 executor-DataFrame tail shape: same parity as the driver-resident path") {
-    // small corpora always take the driver-resident tail; force the
-    // scale shape (executor tail DataFrame, seed joins as plans) so
-    // both duals stay parity-pinned
-    val sinkPath = Files.createTempDirectory("graft_tickdf").toString + "/sink"
-    val events = Tables.events(spark, sf)
-      .filter(col("user_id") < 5)
-      .select("event_id", "ts", "ts_ns", "user_id", "value")
-    val ordered = events.orderBy("ts_ns", "event_id").collect()
-    val cut = (ordered.length * 0.8).toInt
-    def toDf(rows: Array[org.apache.spark.sql.Row]) =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq), events.schema)
-    val tickSize = math.max(1, (ordered.length - cut) / 3)
-    val batches = toDf(ordered.take(cut)) +:
-      ordered.drop(cut).grouped(tickSize).map(g => toDf(g.toArray)).toSeq
-    batches.foreach(b =>
-      IncrementalTick.processBatchForceDf(spark, b, sinkPath))
-    // and a re-delivery through the DF path must stay a no-op (X5)
-    val before = spark.read.parquet(sinkPath).count()
-    IncrementalTick.processBatchForceDf(spark, batches.last, sinkPath)
-    assert(spark.read.parquet(sinkPath).count() == before)
-
-    val sink = spark.read.parquet(sinkPath)
-      .select("event_id", "sma30", "bb_up", "bb_lo", "buy", "sell")
-    val batch = IncrementalTick.enrich(events)
-      .select("event_id", "sma30", "bb_up", "bb_lo", "buy", "sell")
-    assert(sink.count() == batch.count())
-    val mismatch = sink.as("s").join(batch.as("b"),
-        col("s.event_id") === col("b.event_id"))
-      .filter(
-        (col("s.sma30") =!= col("b.sma30")) ||
-        (col("s.bb_up").isNull =!= col("b.bb_up").isNull) ||
-        coalesce(abs(col("s.bb_up") - col("b.bb_up")) > 1e-9, lit(false)) ||
-        coalesce(abs(col("s.bb_lo") - col("b.bb_lo")) > 1e-9, lit(false)) ||
-        (col("s.buy") =!= col("b.buy")) ||
-        (col("s.sell") =!= col("b.sell")))
-    assert(mismatch.isEmpty)
-  }
-
-  test("X5 mixed re-delivery through the DF tail: dup rows drop BEFORE the kernel pass") {
+  test("X5 mixed re-delivery: dup rows drop BEFORE the kernel pass") {
     // ADVICE r16: a batch mixing a re-delivered row with genuinely NEW
     // rows of the same series must not let the duplicate into the
-    // kernel union twice (once from the tail, once as __new) — that
-    // shifts the SMA/Bollinger frames of every co-batched new row.
-    // Without the pre-kernel anti-join the appended VALUES diverge from
-    // the batch recompute even though the row count stays right.
+    // kernel input twice (once from the tail, once as a fresh row) —
+    // that shifts the SMA/Bollinger frames of every co-batched new row.
+    // Without the pre-kernel seen-id filter the appended VALUES diverge
+    // from the batch recompute even though the row count stays right.
     val sinkPath = Files.createTempDirectory("graft_tickmix").toString + "/sink"
     val all = hourly(30)
     val cols = Seq("event_id", "ts", "ts_ns", "user_id", "value")
@@ -147,7 +107,7 @@ class IncrementalTickSpec extends AnyFunSuite {
     // batch 3 = the tail 20 hours of b2 RE-DELIVERED + the new rows
     val b3 = all.filter(col("h") >= 580).select(cols.map(col): _*)
     Seq(b1, b2, b3).foreach(b =>
-      IncrementalTick.processBatchForceDf(spark, b, sinkPath))
+      IncrementalTick.processBatch(spark, b, sinkPath))
 
     val sink = spark.read.parquet(sinkPath)
       .select("event_id", "sma30", "bb_up", "bb_lo", "buy", "sell")
@@ -310,6 +270,25 @@ class IncrementalTickSpec extends AnyFunSuite {
     IncrementalTick.processBatch(spark, tick, sinkPath)
     val after = spark.read.parquet(sinkPath).count()
     assert(after == before, s"re-delivery appended ${after - before} dup rows")
+  }
+
+  test("X2 input budget: an over-budget batch throws before writing anything") {
+    val sinkPath = Files.createTempDirectory("graft_tickb").toString + "/sink"
+    val n = IncrementalTick.TickDriverTailMaxRows + 1L
+    val big = spark.range(n).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1704067200L) + col("id")).as("ts"),
+      ((lit(1704067200L) + col("id")) * lit(1000000000L)).as("ts_ns"),
+      (col("id") % 1000).as("user_id"),
+      col("id").cast("double").as("value"))
+    val e = intercept[IllegalArgumentException] {
+      IncrementalTick.processBatch(spark, big, sinkPath)
+    }
+    assert(e.getMessage.contains("TickDriverTailMaxRows"), e.getMessage)
+    assert(e.getMessage.contains(IncrementalTick.TickDriverTailMaxRows.toString),
+      e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(sinkPath)),
+      "the sink path was created by a refused batch")
   }
 
   test("corrupt sink read fails the tick instead of recomputing from empty") {
