@@ -1,41 +1,39 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE primary JSON line. Uses the shared [[GraftSession]] factory so
-  * the session carries the same static confs (nanosAsLong, UTC, AQE) as
-  * Verify and the tests — a Bench-only session previously broke every
-  * events-based query at read time and the failure was swallowed.
+import graft.BenchHarness._
+
+/** Benchmark main: a table of phases run in order by one [[PhaseLoop]],
+  * each writing its block into one [[BenchRecord]]. The throughput
+  * probes, the full query sweep and the headline DuckDB comparison are
+  * mandatory; every later phase is shed when the wall deadline gets
+  * tight. Uses the shared [[GraftSession]] so the session carries the
+  * same static confs as Verify and the tests.
   *
   * Failures are reported, not hidden: a failed query contributes -1.0 to
-  * `queries` and an entry in `errors`; rc stays 0 so the driver still gets
-  * the JSON line, but the judge can see exactly what failed.
+  * `queries` and an entry in `errors`; rc stays 0 so the caller still
+  * gets the JSON lines. A record run (SPARK_GRAFT_RECORD=1) exits
+  * nonzero when the record gate refuses it or its record file cannot be
+  * written.
   *
-  * Output layout (r3): the full line comes first; the throughput probes,
-  * DuckDB comparison, and ANN recall are then re-emitted as their own
-  * compact single-line JSON objects at the very end of stdout, so a
-  * tail-truncated capture (which dropped the round-2 throughput block)
-  * still carries them. The MemoryStream harness queries (q_x1/q_x3 —
-  * driver collect + processAllAvailable barriers, not operator cost) are
-  * excluded from `total` and reported as `streaming_harness_sec`.
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_ONLY (comma-separated
+  * phase names), SPARK_GRAFT_RECORD, SPARK_GRAFT_WAIVE,
+  * SPARK_GRAFT_WALL_DEADLINE_S (default 2400), SPARK_GRAFT_QUIET_BUDGET_S
+  * (default 180), SPARK_GRAFT_X10 and SPARK_GRAFT_SF1SWEEP (on unless
+  * 0/false/no/off/empty), and the ladder knobs SPARK_GRAFT_DEDUP_MULTS,
+  * SPARK_GRAFT_ANN_MULTS, SPARK_GRAFT_NSW_MULTS, SPARK_GRAFT_NSW_DIM,
+  * SPARK_GRAFT_NSW_INT8.
   */
 object Bench {
 
-  /** Record gate (VERDICT r17 next #2): the query names across the
-    * scaled-tier JSON fragments whose per_query_exec row carries
-    * `"floor_note_missing":true` — i.e. >2x vs DuckDB, not structurally
-    * floored, and with neither a named nor an auto-generated floor
-    * note. A record run (SPARK_GRAFT_RECORD=1) REFUSES to write the
-    * round-record file while any such row exists unwaived: the summary
-    * goes to the `_gated_partial` variant and the run exits nonzero, so
-    * a flagged row can never ship silently in a committed record again
-    * (the r17 q_e2 row shipped bare despite its stamp). `waived` comes
-    * from SPARK_GRAFT_WAIVE (comma-separated query names) and is
-    * itself stamped in the artifact. Factored out of main so
-    * RecordGateSpec can prove a synthetic bare row fails the gate. */
+  /** Record gate: the query names across the scaled-tier JSON fragments
+    * whose per_query_exec row carries `"floor_note_missing":true` — >2x
+    * vs DuckDB, not structurally floored, and with neither a named nor
+    * an automatic floor note — minus the SPARK_GRAFT_WAIVE names. A
+    * record run refuses to write its record while any remain. */
   private[graft] def gateOffenders(scaledBlocks: Seq[String],
       waived: Set[String]): Seq[String] = {
     val bare = """"(q_[a-z0-9_]+)":\{[^{}]*?"floor_note_missing":true""".r
@@ -47,2501 +45,1103 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runT0 = System.nanoTime()
     val spark = GraftSession.get()
-    // untimed warmup: touch every table once so the first measured query
-    // doesn't absorb file-listing/footer-reading/codegen JVM warmup
+    // untimed warmup: the first measured query must not absorb
+    // file-listing, footer-reading and codegen JVM warmup
     graft.sources.Tables.names.foreach { t =>
       try graft.sources.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    // ---- steady-state throughput probes against BASELINE.md's explicit
-    // targets (the per-query timings below carry ~0.5-1 s of fixed
-    // planning cost each, which swamps rows/s at testdata scale):
-    //   frame kernels >= 1M rows/s/core; scoring >= 10k docs/s;
-    //   kNN over 1e5 x 64-d < 1 s.
-    // The probes run FIRST (r4): after the 85-query sweep the JVM carries
-    // GC/heap pressure that degraded the final-run numbers 2-5x versus
-    // the same probes on a clean JVM (r2 and r3 both hit this) — probe
-    // order was the remaining noise source best-of-3 couldn't fix.
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // best-of-N with the full spread kept: a contended run then
-    // self-identifies in the report (BENCH_r05's knn_sec=3.17 was a
-    // one-off environment outlier the bare min couldn't defend against
-    // — VERDICT r5 what's-wrong #4). r7 (VERDICT r6 next #6): n=5 so
-    // the spread's MEDIAN is meaningful next to the min — the probes
-    // already run first (quiet phase, before the sweep and the
-    // streaming harness), so min≈median unless the harness itself is
-    // contended, which the spread then shows.
-    def spreadOf(f: => Unit, n: Int = 5): Seq[Double] =
-      (1 to n).map(_ => time(f)).sorted
-    def spreadJson(s: Seq[Double]): String =
-      s"[${s.map(v => f"$v%.3f").mkString(",")}]"
-    def best(f: => Unit): Double = spreadOf(f).head
-    // 1-minute load average at probe start: the probes are best-of-5 on
-    // an otherwise-quiet JVM, so a high machine load here is the ONLY
-    // way min can diverge from median (r8's 33x knn outlier bisected to
-    // environment contention — HEAD and r7 measure identically on a
-    // quiet box); stamping it makes contended runs self-identifying.
-    def loadAvg(): Double =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
-    // quiet-gate (VERDICT r9 next #3): the NSW serve numbers were
-    // contention casualties three rounds running — the 1-min loadavg
-    // right after a 32-thread build phase reads ~cores and decays with
-    // a ~60 s half-life, so a short bounded wait before the serve
-    // measurements buys a defensible machine state; the stamped value
-    // then PROVES the state in the artifact instead of asserting it.
-    /** (steal, total) jiffies from /proc/stat — hypervisor CPU steal is
-      * the contention loadavg CANNOT see (loadavg counts THIS VM's
-      * runnable threads; a noisy neighbor stealing cycles shows up only
-      * here). r12: the record run stamped loadavg_start 0.78 yet its
-      * frame spread ran [5.18..10.96] — steal%, stamped per phase,
-      * attributes that spread to the box instead of the code. */
-    def cpuStat(): (Long, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/stat").getLines().next()
-          .trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7) else 0L, f.sum)
-      } catch { case _: Throwable => (-1L, -1L) }
-
-    /** Percent of machine CPU capacity stolen by the hypervisor across
-      * the span between two [[cpuStat]] samples; −1 when unreadable. */
-    def stealPct(before: (Long, Long), after: (Long, Long)): Double =
-      if (before._1 < 0 || after._1 < 0 || after._2 <= before._2) -1.0
-      else 100.0 * (after._1 - before._1) / (after._2 - before._2).toDouble
-
-    // CUMULATIVE quiet-gate budget (VERDICT r12 next #1a): ~25 waitQuiet
-    // sites could each wait 90 s — on the r12 driver's steal-contended
-    // box the gates alone threatened the wall budget. The run-wide spend
-    // is capped (default 180 s, env-overridable for record runs); once
-    // exhausted every gate proceeds immediately and the per-phase
-    // loadavg/steal stamps tell the contention story instead.
-    val quietBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUIET_BUDGET_S", "180").toInt
-    val quietSpentMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    def waitQuiet(threshold: Double = 12.0, maxWaitSec: Int = 90): Double = {
-      var l = loadAvg()
-      if (l < 0) return l // platform without loadavg: stamp and move on
-      val t0 = System.nanoTime()
-      while (l > threshold && (System.nanoTime() - t0) / 1e9 < maxWaitSec &&
-             quietSpentMs.get() / 1000 < quietBudgetSec) {
-        Thread.sleep(5000)
-        quietSpentMs.addAndGet(5000L)
-        l = loadAvg()
-      }
-      l
-    }
-    // ---- TOTAL-WALL DEADLINE with phase shedding (VERDICT r13 next #1a):
-    // the r13 driver box ran the ~20-min-quiet default at loadavg 13-21
-    // and the run stretched to 3,568 s — past the driver's ~3,600 s kill,
-    // rc 124, two rounds running. The bench now compares elapsed time
-    // against a run budget BEFORE each optional phase and sheds the rest
-    // when the projection crosses it, so on an arbitrarily slow box it
-    // finishes small with rc 0 instead of always dying mid-run.
-    //  - Mandatory phases (never shed): throughput, sweep, and the
-    //    headline duckdb comparison — which is REORDERED to run right
-    //    after the sweep so the mandatory prefix is contiguous; its
-    //    internal DuckDB sweep budget additionally shrinks to half the
-    //    remaining wall so even it cannot blow the deadline.
-    //  - Sheddable (everything else): ann_recall, ivf_index, the scaled
-    //    tiers/ladders, streaming_tp. A shed phase stamps a
-    //    `phase_shed` line + joins `shed_phases` in every artifact.
-    //  - Projection = quiet-box estimate x measured slowdown (elapsed ÷
-    //    quiet estimate of completed phases), so a 4x-contended box
-    //    sheds 4x earlier.
-    // Default 2400 s leaves ~20 min of margin under a 3,600 s kill even
-    // if one phase overruns its estimate 3x.
-    val wallDeadlineSec =
-      sys.env.getOrElse("SPARK_GRAFT_WALL_DEADLINE_S", "2400").toInt
-    def elapsedSec: Double = (System.nanoTime() - runT0) / 1e9
-    var shedPhases: List[String] = Nil
-    // conservative quiet-box wall estimates per phase (sf0.1, 32 cpus;
-    // from the r13 committed record's ~1,220 s full run)
-    val phaseEstSec: Map[String, Double] = Map(
-      "throughput" -> 240, "sweep" -> 300, "duckdb" -> 420,
-      "ann_recall" -> 90, "ivf_index" -> 150, "dedup_scaled" -> 90,
-      "ann_scaled" -> 300, "nsw_scaled" -> 200, "streaming_tp" -> 120,
-      "duckdb_scaled" -> 360, "duckdb_scaled_x10" -> 900,
-      // r17: default-on with the warm DuckDB-result memo — the phase is
-      // Spark-dump-bound now (the cold-cache first run self-repairs by
-      // the hard subprocess budget + timed_out stamp)
-      "sf1_sweep" -> 700)
-    var quietEstDoneSec = 0.0
-    var lastPhaseEndSec = 0.0
-    def slowdown: Double =
-      math.max(1.0, elapsedSec / math.max(quietEstDoneSec, 120.0))
-    /** True (and stamps the decision) when running `name` would project
-      * past the wall deadline. Call ONLY for sheddable phases, and only
-      * when the block is otherwise enabled. */
-    def shouldShed(name: String): Boolean = {
-      val projected = elapsedSec +
-        phaseEstSec.getOrElse(name, 120.0) * slowdown
-      if (projected <= wallDeadlineSec) false
-      else {
-        shedPhases = shedPhases :+ name
-        println(s"""{"metric":"phase_shed","name":${jstr(name)},""" +
-          f""""elapsed_sec":$elapsedSec%.1f,"projected_sec":$projected%.1f,""" +
-          f""""slowdown":$slowdown%.2f,"deadline_s":$wallDeadlineSec}""")
-        true
-      }
-    }
-    // ---- partial-result state + per-phase emission (VERDICT r12 next
-    // #1c): the r12 driver run blew its wall budget and left
-    // BENCH_r12.json parsed:null — every number lived only at the very
-    // end of a run that never got there. Each completed phase now
-    // (a) prints a one-line progress stamp, (b) rewrites the on-disk
-    // full-summary file from the state measured so far, (c) re-prints
-    // the full compact summary line (VERDICT r13 next #1b: the driver's
-    // `timeout` TERMs the sbt WRAPPER and orphans this fork — only
-    // already-flushed stdout survives, so the latest parseable summary
-    // must already be there after every phase, not only at exit); an
-    // early shutdown hook additionally prints the partial compact line
-    // as the final stdout line when the JVM dies to SIGTERM mid-run.
-    var throughput: Option[String] = None
-    var recall: Option[String] = None
-    var ivf: Option[String] = None
-    var dedupScaled: Option[String] = None
-    var annScaled: Option[String] = None
-    var nswScaled: Option[String] = None
-    var streamTp: Option[String] = None
-    var sf1Sweep: Option[String] = None
-    var duck: Option[String] = None
-    var scaledBlocks: List[String] = Nil
-    var results: Seq[(String, Double)] = Nil
-    // the x10 full-heavy tier is ON by default again (VERDICT r14 next
-    // #3: the round record should carry its own x10 block instead of
-    // depending on an out-of-band archive). The r12 failure mode that
-    // turned it off — 22 DuckDB oracles each burning a 120 s timeout on
-    // a steal-contended box — is now covered twice over: the x10 sweep
-    // has its own 1200 s cumulative budget, and the wall-deadline phase
-    // shedder (shouldShed) drops the whole block with a stamp when the
-    // round budget is tight. SPARK_GRAFT_X10=0 opts out.
-    // opt-out accepts the common falsy spellings, not just the literal
-    // "0" (ADVICE r15: SPARK_GRAFT_X10=false/no/"" surprisingly enabled)
-    val x10Enabled = !sys.env.get("SPARK_GRAFT_X10")
-      .map(_.trim.toLowerCase)
-      .exists(v => Set("0", "false", "no", "off", "").contains(v))
-    // SPARK_GRAFT_ONLY=block1,block2 runs just the named metric blocks
-    // (throughput, sweep, ann_recall, ivf_index, dedup_scaled,
-    // ann_scaled, nsw_scaled, streaming_tp, duckdb, duckdb_scaled,
-    // duckdb_scaled_x10) — the budget tool for one-off archive runs
-    // (e.g. the x100 dedup ladder or the 768-d graph ladder) that
-    // previously re-paid the whole ~30 min bench per special artifact.
-    // Unset = everything (the driver's default run). The scaled duck
-    // tiers need "duckdb" included (the heavy subset is picked from the
-    // base sweep's measured times). A skipped block stamps null.
-    val onlyBlocks: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def runBlock(name: String): Boolean = onlyBlocks.forall(_.contains(name))
-    def pickNum(src: Option[String], key: String): Option[String] =
-      src.flatMap { s =>
-        ("\"" + java.util.regex.Pattern.quote(key) + "\":\\s*(-?[0-9.eE+]+)").r
-          .findFirstMatchIn(s).map(_.group(1))
-      }
-    def mini(src: Option[String], keys: (String, String)*): String = {
-      val fields = keys.flatMap { case (k, out) =>
-        pickNum(src, k).map(v => s""""$out":$v""") }
-      if (fields.isEmpty) "null" else fields.mkString("{", ",", "}")
-    }
-    val streamingNames = graft.queries.StreamingQueries.queries.map(_.name).toSet
-    // The round-record artifact is written ONLY by an explicit record
-    // run (SPARK_GRAFT_RECORD=1). Everything else — SPARK_GRAFT_ONLY
-    // experiment runs ("_partial", r17) and, since r18, the driver's own
-    // default full invocation ("_rerun") — writes to a separate file, so
-    // a post-commit re-run physically cannot overwrite the committed
-    // quiet record (VERDICT r17 next #6, 5th recurrence of the
-    // dirty-tree complaint).
+    val quietBudgetSec = sys.env.getOrElse("SPARK_GRAFT_QUIET_BUDGET_S", "180").toInt
+    val host = new Host(quietBudgetSec)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val x10 = envFlag("SPARK_GRAFT_X10", default = true)
+    val sf1 = envFlag("SPARK_GRAFT_SF1SWEEP", default = true)
+    // Only an explicit record run writes the record file; SPARK_GRAFT_ONLY
+    // runs write `_partial`, every other run `_rerun`, so a re-run can
+    // never overwrite a committed record. Progress rewrites of a record
+    // run go to `_partial` too, so a crashed or refused record run
+    // leaves the committed record intact.
     val isRecordRun = sys.env.get("SPARK_GRAFT_RECORD").contains("1")
     val recordFile = "bench_full_" +
       sfDir.replaceAll("[^A-Za-z0-9.]+", "_").stripPrefix("_") + ".json"
+    def variant(suffix: String) = recordFile.stripSuffix(".json") + suffix
     val fullFile =
-      if (onlyBlocks.isDefined)
-        recordFile.stripSuffix(".json") + "_partial.json"
-      else if (!isRecordRun) recordFile.stripSuffix(".json") + "_rerun.json"
+      if (only.isDefined) variant("_partial.json")
+      else if (!isRecordRun) variant("_rerun.json")
       else recordFile
-    // previous record's scaled-subset membership (VERDICT r16 next #3):
-    // captured from the COMMITTED record artifact (never the _partial /
-    // _rerun variant — ADVICE r17 #5: a partial run diffing against the
-    // previous partial run weakens the no-silent-coverage-change log)
-    // BEFORE the first per-phase rewrite, so queries entering/leaving
-    // the heavy subset via the 0.05 s DuckDB base cut are LOGGED instead
-    // of silently changing coverage (q_t10 left the r16 record
-    // unrecorded; q_j3 needed a manual pin). Bounded to the x5 tier's
-    // per_query_exec keys: the search is capped at the x10 block's start
-    // (ADVICE r17 #1: a record whose x5 block lacks per_query_exec — a
-    // shed run — would otherwise silently adopt the x10 key set).
-    val prevScaledSubset: Set[String] = try {
-      val p = java.nio.file.Paths.get(recordFile)
-      if (!java.nio.file.Files.exists(p)) Set.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val i = txt.indexOf("\"duckdb_scaled\":{")
-        val x10i = txt.indexOf("\"duckdb_scaled_x10\":{")
-        val j = if (i < 0) -1 else txt.indexOf("\"per_query_exec\":{", i)
-        if (j < 0 || (x10i >= 0 && j > x10i)) Set.empty
-        else {
-          val body = if (x10i > j) txt.substring(j, x10i) else txt.substring(j)
-          """"(q_[a-z0-9_]+)":\{""".r
-            .findAllMatchIn(body).map(_.group(1)).toSet
-        }
-      }
-    } catch { case _: Throwable => Set.empty }
-    def errJson: String =
-      errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    /** The compact (<1.5 kB) scalar restatement of every headline number
-      * measured SO FAR — the driver keeps only the last ~2 kB of stdout,
-      * so whatever must reach the judge has to fit here. With
-      * `partial=true` (mid-run / killed-run emission) the line says so
-      * explicitly and carries the run clock. */
-    def buildCompact(partial: Boolean): String = {
-      val timed = results.filter(_._2 >= 0)
-      val batchTimed = timed.filterNot(r => streamingNames(r._1))
-      val total = batchTimed.map(_._2).sum
-      val headlineNames = SparkEntry.benchQueries.toSet
-      val headline = batchTimed.filter(r => headlineNames(r._1)).map(_._2).sum
-      // r19 (VERDICT r18 next #6): the driver's PERF diff reads this
-      // "queries" map, and slowest-3 left it n_common=1 round over
-      // round. The map now packs as many slowest-first entries as fit
-      // the COMPACT budget — the driver keeps only the last ~2000
-      // chars of stdout (measured: BENCH_r15..r18 all carry exactly
-      // 2000), so a full 140-entry map here would front-truncate the
-      // final line and dark the whole bench. The full map is emitted
-      // as its own `sweep_queries` stdout line and in the on-disk
-      // artifact's "queries" field.
-      def assemble(qmap: String): String = {
-        val elapsed = (System.nanoTime() - runT0) / 1e9
-        s"""{"metric":"summary",${if (partial) "\"partial\":true," else ""}""" +
-        s""""value":$total,"unit":"sec","headline":$headline,""" +
-      s""""n_queries":${results.size},"n_failed":${errors.size},""" +
-      f""""elapsed_sec":$elapsed%.1f,""" +
-      s""""quiet_wait_sec":${quietSpentMs.get() / 1000},""" +
-      s""""quiet_budget_s":$quietBudgetSec,"x10_enabled":$x10Enabled,""" +
-      s""""deadline_s":$wallDeadlineSec,""" +
-      s""""shed_phases":[${shedPhases.map(jstr).mkString(",")}],""" +
-      s""""failed":[${errors.keys.take(5).map(jstr).mkString(",")}],""" +
-      s""""queries":$qmap,""" +
-      s""""tp":${mini(throughput,
-        "frame_rows_per_s" -> "frame_rps", "frame_narrow_rows_per_s" -> "narrow_rps",
-        "scorer_docs_per_s" -> "scorer_dps", "knn_sec" -> "knn_sec",
-        "loadavg_start" -> "load0", "steal_pct" -> "steal")},""" +
-      s""""nsw":${mini(throughput,
-        "build_sec" -> "build", "first_search_sec" -> "first",
-        "query_amortized_sec" -> "amort",
-        "layered_build_sec" -> "l_build", "layered_first_search_sec" -> "l_first",
-        "layered_query_amortized_sec" -> "l_amort",
-        "int8_build_sec" -> "i8_build",
-        "int8_first_search_sec" -> "i8_first",
-        "int8_query_amortized_sec" -> "i8_amort",
-        "int8_bytes_ratio" -> "i8_bytes_ratio",
-        // aliases carry the ef so a reader can never mistake the
-        // ef=32 adversarial-corpus floor for the index's recall
-        // (VERDICT r10 next #7)
-        "layered_recall10_ef32" -> "l_recall10_ef32",
-        "layered_recall10_ef512" -> "l_recall10_ef512",
-        "int8_recall10_ef32" -> "i8_recall10_ef32",
-        "int8_recall10_ef512" -> "i8_recall10_ef512",
-        "layered_batched_sec_ef512" -> "l_batched_ef512",
-        "loadavg_serve" -> "load_serve",
-        "layered_loadavg_serve" -> "l_load_serve")},""" +
-      s""""ivf":${mini(ivf,
-        "batch_size" -> "batch_n",
-        "batched_query_sec" -> "batched",
-        "pq_batched_query_sec" -> "pq_batched",
-        "query_amortized_sec" -> "amort",
-        "int8_query_amortized_sec" -> "i8_amort",
-        "pq_query_amortized_sec" -> "pq_amort",
-        "pq_bytes_ratio" -> "pq_bytes_ratio",
-        "loadavg_serve" -> "load_serve")},""" +
-      s""""recall":${mini(recall,
-        "v4b_lsh" -> "v4b", "v6b_ivf" -> "v6b", "v8b_nsw" -> "v8b",
-        "v11b_ivfpq" -> "v11b", "v11c_ivfpq_rerank" -> "v11c",
-        "v12b_ivfpq_trained" -> "v12b", "v12c_ivfpq_trained_rerank" -> "v12c")},""" +
-      s""""duckdb":${mini(duck,
-        "median_ratio" -> "median", "median_ratio_heavy" -> "heavy",
-        "median_ratio_exec_heavy" -> "exec_heavy",
-        "median_ratio_cached_heavy" -> "cached_heavy")},""" +
-      s""""scaled_x5_exec":${pickNum(
-        scaledBlocks.find(_.startsWith("\"duckdb_scaled\":")),
-        "median_ratio_exec_heavy").getOrElse("null")},""" +
-      s""""scaled_x10_exec":${pickNum(
-        scaledBlocks.find(_.startsWith("\"duckdb_scaled_x10\":")),
-        "median_ratio_exec_heavy").getOrElse("null")},""" +
-      s""""dedup":${mini(dedupScaled,
-        "ratio_x5" -> "r5", "ratio_x25" -> "r25",
-        "ratio_x100" -> "r100", "x100_pairs" -> "p100")},""" +
-      s""""ann_scaled":${mini(annScaled,
-        "serve_ratio_x5" -> "r5", "serve_ratio_x25" -> "r25",
-        "serve_ratio_x100" -> "r100",
-        "x25_serve_sec" -> "x25_serve",
-        "x1_recall10" -> "rec1", "x5_recall10" -> "rec5",
-        "x25_recall10" -> "rec25",
-        "x25_probed_frac" -> "frac25")},""" +
-      s""""nsw_scaled":${mini(nswScaled,
-        "serve_ratio_x5" -> "r5", "serve_ratio_x25" -> "r25",
-        "serve_ratio_x100" -> "r100",
-        "x25_build_sec" -> "x25_build", "x25_serve_sec" -> "x25_serve",
-        "x1_recall10" -> "rec1", "x25_recall10" -> "rec25")},""" +
-      s""""stream":${mini(streamTp,
-        "agg_events_per_s" -> "agg_eps",
-        "tick_events_per_s" -> "tick_eps")},""" +
-      s""""full":${jstr(fullFile)},"sf":${jstr(sfDir)}}"""
-      }
-      // pack slowest-first entries under the 2000-char tail budget
-      // (floor 3 = the pre-r19 behavior, ~1900 target leaves slack for
-      // the driver's own framing)
-      val slowestSorted = batchTimed.sortBy(-_._2)
-      val budget = math.max(0, 1900 - assemble("{}").length + 2)
-      val sb = new StringBuilder
-      var used = 0
-      var kept = 0
-      var full = false
-      slowestSorted.foreach { case (k, v) =>
-        if (!full) {
-          val ent = s"${jstr(k)}:${f"$v%.2f"}"
-          val add = ent.length + (if (kept > 0) 1 else 0)
-          if (kept < 3 || used + add <= budget) {
-            if (kept > 0) sb.append(',')
-            sb.append(ent); used += add; kept += 1
-          } else full = true
-        }
-      }
-      assemble("{" + sb.toString + "}")
-    }
-    // Progressive (per-phase / mid-run) artifact writes NEVER touch the
-    // record file: during a record run they go to the _partial variant,
-    // so a crashed or gate-refused record run leaves the previously
-    // committed record intact on disk (r18 — before this, phaseDone's
-    // rewrites clobbered it from the first phase on).
-    val progressFile =
-      if (isRecordRun) recordFile.stripSuffix(".json") + "_partial.json"
-      else fullFile
-    def writeArtifact(content: String, file: String): Unit =
-      try java.nio.file.Files.write(java.nio.file.Paths.get(file),
-        (content + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    def writeFullFile(content: String): Unit =
-      writeArtifact(content, progressFile)
-    /** The FULL-fragment partial artifact: every completed block's whole
-      * JSON fragment (per-mult ladder fields, per-query scaled blocks —
-      * not the compact minis) plus errors. The r13 first special run
-      * died mid-ladder and its compact-schema partial had silently
-      * dropped the dedup x100 fields the run existed to measure. */
-    def fullPartialLine(): String = {
-      val timed = results.filter(_._2 >= 0)
-      val batchTimed = timed.filterNot(r => streamingNames(r._1))
-      val total = batchTimed.map(_._2).sum
-      val extras = Seq(throughput, recall, ivf, dedupScaled, annScaled,
-        nswScaled, streamTp, sf1Sweep, duck).flatten ++ scaledBlocks
-      val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"summary","partial":true,"value":$total,"unit":"sec",""" +
-      f""""elapsed_sec":${(System.nanoTime() - runT0) / 1e9}%.1f,""" +
-      s""""quiet_wait_sec":${quietSpentMs.get() / 1000},""" +
-      s""""deadline_s":$wallDeadlineSec,""" +
-      s""""shed_phases":[${shedPhases.map(jstr).mkString(",")}],""" +
-      s""""n_queries":${results.size},"n_failed":${errors.size},""" +
-      extras.map(_ + ",").mkString +
-      s""""queries":$qs,"errors":$errJson,"sf":${jstr(sfDir)}}"""
-    }
-    /** Stamp a completed phase: progress line to stdout, refresh the
-      * on-disk partial artifact, then re-print the full compact summary
-      * so the driver's stdout tail ALWAYS ends with a parseable summary
-      * of everything measured so far (VERDICT r13 next #1b). The
-      * slowdown tracker only credits the phase's quiet estimate when the
-      * phase actually ran (an SPARK_GRAFT_ONLY-skipped block costs ~0 s,
-      * and crediting it would mask real contention). A phase that DID
-      * run but finished in under 5% of its quiet estimate did ~no work
-      * (internal error caught into errors(), python3/duckdb absent) —
-      * credit only its measured wall, or `slowdown` underestimates the
-      * contention the deadline shedding keys off. */
-    def phaseDone(name: String): Unit = {
-      val elapsed = (System.nanoTime() - runT0) / 1e9
-      // Only ESTIMATED phases are wall boundaries: the sweep's interior
-      // sweep_40/80/... progress stamps must neither credit nor reset
-      // the boundary, or the final sweep stamp would measure only its
-      // post-last-stamp tail, credit ~nothing, and the inflated
-      // slowdown would shed optional phases on a perfectly quiet box.
-      phaseEstSec.get(name).foreach { est =>
-        val phaseWall = elapsed - lastPhaseEndSec
-        lastPhaseEndSec = elapsed
-        if (runBlock(name) && !shedPhases.contains(name))
-          quietEstDoneSec += (if (phaseWall < est * 0.05) phaseWall else est)
-      }
-      println(s"""{"metric":"phase","name":${jstr(name)},""" +
-        f""""elapsed_sec":$elapsed%.1f,""" +
-        s""""quiet_wait_sec":${quietSpentMs.get() / 1000},""" +
-        f""""loadavg":${loadAvg()}%.2f}""")
-      writeFullFile(fullPartialLine())
-      println(buildCompact(partial = true))
-    }
-    @volatile var finalCompact: Option[String] = None
-    // Registered EARLY: on a driver wall-budget SIGTERM mid-run this
-    // prints the best partial line as the final stdout line (and after a
-    // normal finish it re-prints the final compact line after sbt's
-    // trailer — VERDICT r8 next #6 kept).
+    val progressFile = if (isRecordRun) variant("_partial.json") else fullFile
+    val record = new BenchRecord(sfDir, fullFile,
+      deadlineSec = sys.env.getOrElse("SPARK_GRAFT_WALL_DEADLINE_S", "2400").toInt,
+      quietBudgetSec = quietBudgetSec,
+      x10Enabled = x10, clock = () => (System.nanoTime() - runT0) / 1e9,
+      quietWaitSec = () => host.quietWaitSec,
+      streamingNames = graft.queries.StreamingQueries.queries.map(_.name).toSet,
+      headlineNames = SparkEntry.benchQueries.toSet)
+    val loop = new PhaseLoop(record, only, progressFile, println(_))
+    @volatile var finalLine: Option[String] = None
+    // registered early: a SIGTERM mid-run still ends stdout with the best
+    // partial summary, and after a normal finish the final line is
+    // re-printed after sbt's own trailer
     sys.addShutdownHook {
-      System.out.println(finalCompact.getOrElse(buildCompact(partial = true)))
+      System.out.println(finalLine.getOrElse(record.compact(partial = true)))
       System.out.flush()
     }
-    throughput = if (!runBlock("throughput")) None else try {
-      spark.catalog.clearCache()
-      System.gc()
-      // quiet-gate the probe phase itself, not just the NSW serves: the
-      // r9 frame spread ([6.5..79.1] over 5 reps) was machine contention
-      // at probe time, and best-of-5 can't save the headline when all
-      // five reps are contended. The stamped loadavg_start then proves
-      // the starting state either way.
-      waitQuiet()
-      val load0 = loadAvg()
-      val cpu0 = cpuStat()
-      // frame-kernel probe: SMA30 + Bollinger(20,2) over 20M synthetic
-      // rows across 1000 series — one shuffle, windowed aggregates in
-      // whole-stage codegen
-      val frameRows = 20000000L
-      val sdf = spark.range(frameRows)
-        .select((col("id") % 1000).as("user_id"), col("id").as("ts"),
-          sin(col("id").cast("double") * 1e-3).as("value"))
-      val w = Window.partitionBy("user_id").orderBy("ts")
-      val f20 = w.rowsBetween(-19, 0)
-      val frameSpread = spreadOf {
-        sdf.select(
-          avg(col("value")).over(w.rowsBetween(-29, 0)).as("sma"),
-          (avg(col("value")).over(f20) + lit(2.0) * stddev_pop(col("value")).over(f20)).as("up"))
-          .filter(col("sma").isNotNull && col("up").isNotNull)
-          .count()
-      }
-      val frameSec = frameSpread.head
-      // narrow-kernel probe: the same trailing-window arithmetic run as
-      // the engine's fused mapPartitions path on already-partitioned
-      // data (what a co-partitioned 100 TB layout gives every stage
-      // after the first shuffle) — isolates kernel throughput from the
-      // one-off exchange the shuffled probe above includes
-      import spark.implicits._
-      val narrowSpread = spreadOf {
-        spark.range(frameRows)
-          .select(sin(col("id").cast("double") * 1e-3).as("value"))
-          .as[Double]
-          .mapPartitions { it =>
-            val ring = new Array[Double](30)
-            var n = 0L
-            var sum = 0.0
-            var kept = 0L
-            while (it.hasNext) {
-              val v = it.next()
-              val slot = (n % 30).toInt
-              if (n >= 30) sum -= ring(slot)
-              ring(slot) = v
-              sum += v
-              n += 1
-              if (n >= 30 && sum / 30.0 < 2.0) kept += 1
-            }
-            Iterator.single(kept)
-          }
-          .reduce(_ + _)
-      }
-      val narrowSec = narrowSpread.head
-      // scorer probe: the M4 fan-out over the corpus replicated to ~100k
-      // docs (steady state: expensive text stats staged once per field)
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val nDocs = docs.count()
-      val copies = math.max(1, (100000 / math.max(nDocs, 1L)).toInt)
-      // replicate via ONE crossJoin with a copy index — at sf0.001 the
-      // former per-copy unionByName built a 200-branch union whose plan
-      // alone dominated the probe. The text is PERTURBED per copy:
-      // otherwise Catalyst pushes the stats projection below the join
-      // and computes each unique doc once, replicating results — the
-      // probe would measure join fan-out, not scoring
-      val bigDocs = docs.crossJoin(
-          spark.range(copies).select(col("id").as("copy_i")))
-        .withColumn("doc_id", col("doc_id") + col("copy_i") * lit(10000000L))
-        .withColumn("text", concat(col("text"), lit(" c"), col("copy_i")))
-        .drop("copy_i")
-      val scoredDocs = nDocs * copies
-      def scorerPlan(in: org.apache.spark.sql.DataFrame) = {
-        val withC = graft.operators.Scorers.withFieldStats(
-          in, "c", col("text"), keepTh = true)
-        val staged = graft.operators.Scorers.withFieldStats(
-          withC, "t", substring(col("text"), 1, 80))
-        staged
-          .withColumn("th", col("c_th"))
-          .withColumn("raw", graft.operators.Scorers.rawEmbeddingFromHashes(col("th"), 16))
-          .select(col("doc_id"), col("c_pos"), col("c_neg"), col("t_pos"),
-            col("t_neg"), element_at(col("raw"), 1).as("e0"))
-          .filter(col("c_pos").isNotNull)
-      }
-      scorerPlan(docs.limit(500)).count() // warm codegen/planning
-      val scorerSpread = spreadOf { scorerPlan(bigDocs).count() }
-      val scorerSec = scorerSpread.head
-      // kNN probe: brute-force top-10 cosine over 1e5 synthetic vectors
-      // at the BASELINE-specified 768 dims; the dot is a codegen'd
-      // element_at chain (same left-fold order as the HOF form). The
-      // synthetic vectors are persisted before timing — the target is
-      // scan+score+top-k cost, not the sin() generation plan.
-      val knnN = 100000L
-      val dim = 768
-      // (id+1): row 0 must not be the all-zero vector — the recall10
-      // exact-top-10 pass scores with the SQL `cosine`, which divides
-      // by the row norm and throws under ANSI mode on a zero vector
-      // (real embedding tables never contain one, so the oracled
-      // queries keep the unguarded — bit-oracle-matched — form)
-      val vecs = spark.range(knnN)
-        .select(col("id"),
-          array((0 until dim).map(d =>
-            sin((col("id") + 1).cast("double") * (d + 1) * 1e-4)): _*).as("v"))
-        .persist()
-      vecs.count() // materialize before timing
-      val qvFull = graft.operators.VectorOps.hyperplanes(1, dim, seed = 13L).head
-      // graft_dot: codegen'd constant-vector dot — at 768 dims a literal
-      // expression chain either overflows Catalyst's recursion (left-deep)
-      // or busts the codegen method limit into interpreted eval (balanced,
-      // ~10x slower); see functions.DotConst
-      val dot = call_function("graft_dot", col("v"),
-        array(qvFull.map(lit): _*))
-      def topk() = vecs.withColumn("score", dot)
-        .orderBy(desc("score"), col("id")).limit(10).collect()
-      topk() // warm codegen
-      val knnSpread = spreadOf(topk(), n = 5)
-      val knnSec = knnSpread.head
-      // graph-ANN probe over the SAME 1e5 x 768-d corpus: per-shard NSW
-      // build + search end-to-end (the index path a user takes when a
-      // brute scan per query is too expensive; build amortizes across
-      // queries — this times the worst case, build included)
-      val nswCorpus = vecs
-        .withColumnRenamed("id", "vec_id").withColumnRenamed("v", "embedding")
-      val nswSpread = spreadOf {
-        graft.operators.GraphAnn.searchTopK(
-          nswCorpus, "vec_id", "embedding", qvFull, k = 10,
-          numShards = Runtime.getRuntime.availableProcessors()).collect()
-      }
-      val nswSec = nswSpread.head
-      // persisted-NSW amortization (VERDICT r5 missing #3): the graphs
-      // built once to disk, then served — vs the rebuild-per-call nswSec
-      // sfDir suffix (ADVICE r6): a fixed path lets two bench JVMs at
-      // different SFs race on the delete/build/delete below — the NswIndex
-      // path lock is JVM-local and doesn't cover these explicit deletes.
-      val nswIdxPath = System.getProperty("java.io.tmpdir") + "/graft_nsw_bench_" +
-        sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val nswFs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswIdxPath), true)
-      // quiet-gate + stamp EVERY build phase, not just the serves
-      // (VERDICT r11 what's-wrong #1: the r11 artifact of record stamped
-      // int8_build 94.8 s on a loadavg-23 box — a 9x contention artifact
-      // that read as a regression; builds were the only unguarded spans)
-      val nswLoadBuild = waitQuiet()
-      val nswBuildSec = time {
-        graft.operators.NswIndex.buildIfAbsent(
-          nswCorpus, "vec_id", "embedding", nswIdxPath,
-          numShards = Runtime.getRuntime.availableProcessors())
-      }
-      // first serve pays the one-time load (scan + shard shuffle +
-      // per-executor graph reconstruction); steady state is a beam walk
-      // over resident graphs — report both, they are different numbers.
-      // r10 (VERDICT r9 next #3): the first-search is quiet-gated and
-      // best-of-2 — evictServed drops the resident state so the load is
-      // honestly re-paid per rep, and a contended rep can't be the
-      // number of record when the other rep was clean.
-      def servePair(path: String): (Seq[Double], Double) = {
-        val nswServe = 4
-        val firstSpread = (1 to 2).map { _ =>
-          graft.operators.NswIndex.evictServed(path)
-          time {
-            graft.operators.NswIndex.searchTopK(
-              spark, path, qvFull, k = 10).collect()
-          }
-        }.sorted
-        val amort = time {
-          (1 to nswServe).foreach { _ =>
-            graft.operators.NswIndex.searchTopK(
-              spark, path, qvFull, k = 10).collect()
-          }
-        } / nswServe
-        (firstSpread, amort)
-      }
-      val nswLoadServe = waitQuiet()
-      val (nswFirstSpread, nswAmortSec) = servePair(nswIdxPath)
-      val nswFirstSec = nswFirstSpread.head
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswIdxPath), true)
-      // layered-HNSW persisted variant (r9 — layout v3): same corpus,
-      // same shard count; the hierarchy replaces the per-insert stride
-      // probes (the flat build's dominant cost) and the per-search
-      // entry evals. Reported side by side so the flat-vs-layered
-      // build/serve tradeoff lives in the artifact of record.
-      val nswlPath = nswIdxPath + "_l"
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswlPath), true)
-      val nswlLoadBuild = waitQuiet()
-      val nswlCpu0 = cpuStat()
-      val nswlBuildSec = time {
-        graft.operators.NswIndex.buildIfAbsent(
-          nswCorpus, "vec_id", "embedding", nswlPath,
-          graft.operators.GraphAnn.Params(layered = true),
-          numShards = Runtime.getRuntime.availableProcessors())
-      }
-      val nswlStealBuild = stealPct(nswlCpu0, cpuStat())
-      val nswlLoadServe = waitQuiet()
-      val (nswlFirstSpread, nswlAmortSec) = servePair(nswlPath)
-      val nswlFirstSec = nswlFirstSpread.head
-      // int8-quantized layered variant (r10 — VERDICT r9 next #4, the
-      // reference's full serving config: HNSW + scalar int8 always_ram,
-      // init_qdrant.py:51-57): same corpus and shard count; reported
-      // next to the raw-payload hierarchy so the bytes/recall tradeoff
-      // lives in the artifact of record.
-      val nswqPath = nswIdxPath + "_i8"
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswqPath), true)
-      val nswqLoadBuild = waitQuiet()
-      val nswqCpu0 = cpuStat()
-      val nswqBuildSec = time {
-        graft.operators.NswIndex.buildIfAbsent(
-          nswCorpus, "vec_id", "embedding", nswqPath,
-          graft.operators.GraphAnn.Params(layered = true),
-          numShards = Runtime.getRuntime.availableProcessors(),
-          quantize = true)
-      }
-      val nswqStealBuild = stealPct(nswqCpu0, cpuStat())
-      // coarse build-cost regression guard (VERDICT r11 next #9 /
-      // ADVICE r10 #4 follow-through): int8 quantization staging must
-      // stay a small constant over the raw layered build — a future
-      // optimizer heuristic change that collapses the staged projection
-      // back into an O(dim²) recompute should fail the bench loudly,
-      // not surface as a silent number drift. Only armed when both
-      // build phases started quiet, so machine contention can't fake a
-      // regression.
-      // arm only on a GENUINELY quiet box: the waitQuiet threshold (12)
-      // is a proceed-anyway bound, not a quiet certificate — an x100
-      // special run armed at loadavg 11.x and stamped a 53.9 s int8
-      // build that three <6-loadavg runs put at 10-12 s. r13 (VERDICT
-      // r12 next #2): ALSO require the measured per-phase hypervisor
-      // steal < 0.5% — the r12 driver run armed the sibling IVF guard at
-      // loadavg 1.95 under 2-7.6% steal (contention loadavg cannot see)
-      // and stamped a fake n_failed. Unreadable steal (-1) never arms.
-      if (nswlLoadBuild >= 0 && nswlLoadBuild < 6.0 &&
-          nswqLoadBuild >= 0 && nswqLoadBuild < 6.0 &&
-          nswlStealBuild >= 0 && nswlStealBuild < 0.5 &&
-          nswqStealBuild >= 0 && nswqStealBuild < 0.5 &&
-          nswqBuildSec > 5.0 * math.max(nswlBuildSec, 0.5)) {
-        errors("__int8_build_guard") =
-          f"int8 layered build $nswqBuildSec%.1fs > 5x raw layered " +
-            f"$nswlBuildSec%.1fs on a quiet box (steal " +
-            f"$nswlStealBuild%.2f/$nswqStealBuild%.2f%%)"
-      }
-      val (nswqFirstSpread, nswqAmortSec) = servePair(nswqPath)
-      val nswqFirstSec = nswqFirstSpread.head
-      val nswlBytes = graft.operators.NswIndex.graphBytes(spark, nswlPath)
-      val nswqBytes = graft.operators.NswIndex.graphBytes(spark, nswqPath)
-      // recall@10 of the layered serves against the exact cosine top-10,
-      // MEAN over 8 query hyperplanes (a single query is a coin flip at
-      // k=10), at two beam widths. The sin corpus is adversarial for
-      // graph navigation — aliasing puts near-identical similarity mass
-      // in multiple far-apart id regions (one r10 measurement: exact
-      // top-10 split across ids ~14205-14209 and ~77037-77041), so the
-      // default beam reads low here while the SAME serve path measures
-      // 1.0 on the real embeddings table (ann_recall.v8b_nsw). Reporting
-      // ef=32 and ef=512 side by side shows the knob that buys recall
-      // back — and the batched serve seconds show what it costs.
-      val recallQs = graft.operators.VectorOps.hyperplanes(8, dim, seed = 13L)
-        .zipWithIndex.map { case (q, i) => (i.toLong, q) }
-      val exactByQ = recallQs.map { case (qid, q) =>
-        qid -> nswCorpus
-          .withColumn("s", graft.operators.VectorOps.cosine(
-            col("embedding"), typedLit(q.toSeq)))
-          .orderBy(desc("s"), col("vec_id")).limit(10)
-          .collect().map(_.getLong(0)).toSet
-      }.toMap
-      // one batched searchShards job serves all 8 queries — also the
-      // per-query cost of the production (batch) serve shape, reported
-      // next to the one-query-per-job amortized numbers above
-      def recallAndSec(path: String, ef: Int): (Double, Double) = {
-        val t0 = System.nanoTime()
-        val byQ = graft.operators.NswIndex.searchShards(
-          spark, path, recallQs, kPerShard = 10, efSearch = ef)
-          .collect().groupBy(_.getLong(0))
-        val sec = (System.nanoTime() - t0) / 1e9 / recallQs.size
-        val mean = recallQs.map { case (qid, _) =>
-          byQ.getOrElse(qid, Array.empty)
-            .sortBy(r => (-r.getDouble(2), r.getLong(1)))
-            .take(10).map(_.getLong(1)).count(exactByQ(qid).contains) / 10.0
-        }.sum / recallQs.size
-        (mean, sec)
-      }
-      val (nswlRecall, nswlBatchSec) = recallAndSec(nswlPath, ef = 32)
-      val (nswlRecallWide, nswlBatchWideSec) = recallAndSec(nswlPath, ef = 512)
-      val (nswqRecall, _) = recallAndSec(nswqPath, ef = 32)
-      val (nswqRecallWide, _) = recallAndSec(nswqPath, ef = 512)
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswlPath), true)
-      nswFs.delete(new org.apache.hadoop.fs.Path(nswqPath), true)
-      vecs.unpersist()
-      Some(
-        s""""throughput":{"order":"pre-sweep",""" +
-        f""""loadavg_start":$load0%.2f,"loadavg_end":${loadAvg()}%.2f,""" +
-        f""""steal_pct":${stealPct(cpu0, cpuStat())}%.2f,""" +
-        s""""frame_rows":$frameRows,"frame_sec":$frameSec,""" +
-        s""""frame_rows_per_s":${(frameRows / frameSec).toLong},""" +
-        s""""frame_narrow_sec":$narrowSec,""" +
-        s""""frame_narrow_rows_per_s":${(frameRows / narrowSec).toLong},""" +
-        s""""scorer_docs":$scoredDocs,"scorer_sec":$scorerSec,""" +
-        s""""scorer_docs_per_s":${(scoredDocs / scorerSec).toLong},""" +
-        s""""knn_vectors":$knnN,"knn_sec":$knnSec,""" +
-        s""""nsw_build_search_sec":$nswSec,""" +
-        s""""nsw_index":{"build_sec":${f"$nswBuildSec%.3f"},""" +
-        f""""loadavg_build":$nswLoadBuild%.2f,""" +
-        f""""loadavg_serve":$nswLoadServe%.2f,""" +
-        s""""first_search_sec":${f"$nswFirstSec%.3f"},""" +
-        s""""first_search_spread":${spreadJson(nswFirstSpread)},""" +
-        s""""query_amortized_sec":${f"$nswAmortSec%.4f"},""" +
-        s""""rebuild_per_query_sec":${f"$nswSec%.3f"},""" +
-        s""""layered_build_sec":${f"$nswlBuildSec%.3f"},""" +
-        f""""layered_loadavg_build":$nswlLoadBuild%.2f,""" +
-        f""""layered_steal_build":$nswlStealBuild%.2f,""" +
-        f""""layered_loadavg_serve":$nswlLoadServe%.2f,""" +
-        s""""layered_first_search_sec":${f"$nswlFirstSec%.3f"},""" +
-        s""""layered_first_search_spread":${spreadJson(nswlFirstSpread)},""" +
-        s""""layered_query_amortized_sec":${f"$nswlAmortSec%.4f"},""" +
-        s""""int8_build_sec":${f"$nswqBuildSec%.3f"},""" +
-        f""""int8_loadavg_build":$nswqLoadBuild%.2f,""" +
-        f""""int8_steal_build":$nswqStealBuild%.2f,""" +
-        s""""int8_first_search_sec":${f"$nswqFirstSec%.3f"},""" +
-        s""""int8_first_search_spread":${spreadJson(nswqFirstSpread)},""" +
-        s""""int8_query_amortized_sec":${f"$nswqAmortSec%.4f"},""" +
-        s""""layered_bytes":$nswlBytes,"int8_bytes":$nswqBytes,""" +
-        f""""int8_bytes_ratio":${nswqBytes.toDouble / math.max(nswlBytes, 1L)}%.3f,""" +
-        f""""layered_recall10_ef32":$nswlRecall%.3f,""" +
-        f""""layered_recall10_ef512":$nswlRecallWide%.3f,""" +
-        f""""int8_recall10_ef32":$nswqRecall%.3f,""" +
-        f""""int8_recall10_ef512":$nswqRecallWide%.3f,""" +
-        f""""layered_batched_sec_ef32":$nswlBatchSec%.4f,""" +
-        f""""layered_batched_sec_ef512":$nswlBatchWideSec%.4f},""" +
-        s""""spread":{"frame":${spreadJson(frameSpread)},""" +
-        s""""narrow":${spreadJson(narrowSpread)},""" +
-        s""""scorer":${spreadJson(scorerSpread)},""" +
-        s""""knn":${spreadJson(knnSpread)},""" +
-        s""""nsw":${spreadJson(nswSpread)}}}""")
-    } catch {
-      case e: Throwable =>
-        errors("__throughput") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("throughput")
-    // ---- the full query sweep (timed cold-ish: first execution of each
-    // plan in this JVM; the probes above warmed tables and codegen only)
-    if (runBlock("sweep")) {
-      val sweepBuf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      // last-resort guard: the sweep is mandatory, but on a box slow
-      // enough that the sweep ALONE crosses the wall deadline, a partial
-      // sweep with rc 0 beats a complete sweep the driver never sees
-      var sweepShed = 0
-      SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.foreach {
-        case ((name, fn), i) =>
-          if (elapsedSec > wallDeadlineSec) sweepShed += 1
-          else {
-            // label the query's jobs so UI/event-log attribution works
-            // (guide §1.5); description is thread-local and cleared after
-            spark.sparkContext.setJobDescription(s"sweep:$name")
-            val t0 = System.nanoTime()
-            val ok =
-              try { fn(spark, sfDir).count(); true }
-              catch {
-                case e: Throwable =>
-                  errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-                  false
-              }
-            spark.sparkContext.setJobDescription(null)
-            sweepBuf += name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-          }
-          if ((i + 1) % 40 == 0) {
-            results = sweepBuf.toSeq
-            phaseDone(s"sweep_${i + 1}")
-          }
-      }
-      if (sweepShed > 0) {
-        shedPhases = shedPhases :+ s"sweep_tail_$sweepShed"
-        println(s"""{"metric":"phase_shed","name":"sweep_tail_$sweepShed",""" +
-          f""""elapsed_sec":$elapsedSec%.1f,"deadline_s":$wallDeadlineSec}""")
-      }
-      results = sweepBuf.toSeq
-      phaseDone("sweep")
-    }
-    // ---- headline DuckDB comparison: MANDATORY phase, reordered to run
-    // right after the sweep (VERDICT r13 next #1a) so the wall-deadline
-    // shedding below can drop every optional phase while still
-    // guaranteeing the three headline blocks land in the artifact.
-    // x5 over the full heavy subset (the r6 artifact, unchanged); the
-    // opt-in x10 tier runs the SAME full heavy set (since r11 next #8 —
-    // an earlier design used a reduced 8-query subset) so
-    // BENCH_r{N}.json itself carries the "sf1" amortization point
-    // (VERDICT r6 next #3: previously builder-run ScaleProof only).
-    // the two perennial slowest-list leaders ride BOTH scaled tiers
-    // (VERDICT r10 next #5): their Spark wall at sf0.1 is dominated by
-    // round-trip shuffle latency that should amortize with volume —
-    // pinning them into the x5/x10 comparisons measures that instead of
-    // asserting it. Their oracles live outside the relational prefix
-    // set, so they're spliced into the scaled oracle map explicitly.
-    val dedupPins = Seq("q_d1_minhash_lsh", "q_d5_dup_clusters")
-    // q_s4 (the bare bounded range scan) rides both tiers as the per-job
-    // floor instrument (VERDICT r12 next #3) — floor_ratio needs it
-    // measured in the same tier, whether or not its duck time clears the
-    // 50 ms heavy bar.
-    // q_j3_range_count pinned since r16: the fused one-source rewrite
-    // made its base DuckDB time dip below the 0.05 s heavy-subset cut,
-    // which silently dropped the very query whose scaled ratio the
-    // round record is supposed to carry
-    // q_j3b pinned since r17: the general interval join prices the
-    // generality tax vs the fused q_j3 — its base duck time hovers at
-    // the 0.05 s cut (it dropped out of the first r17 record run, now
-    // visibly logged by scaled_subset_membership, but it should stay
-    // recorded rather than merely logged-as-dropped)
-    // q_t10 pinned since r17 for the same reason: its base duck time
-    // flaps around the cut (0.047-0.06 s round to round) and it is a
-    // NOTED floored row that silently left the r16 record — the
-    // membership log now shows such drops, the pin keeps the row.
-    val scaledPins =
-      dedupPins ++ Seq("q_s4_range_scan", "q_j3_range_count",
-        "q_j3b_range_join_general", "q_t10_pii_redact")
-    // base-sweep measurements the scaled tiers (separate phases below)
-    // consume: the heavy subset is picked from MEASURED base duck times
-    var duckSecBase: Map[String, Double] = Map.empty
-    var relScaled: Map[String, String] = Map.empty
-    // ---- DuckDB wall-time comparison (BASELINE.md "relational < 2x
-    // DuckDB" — unmeasured through round 2). Benchmark tooling only: the
-    // oracle SQLs for the relational subset run in a DuckDB subprocess on
-    // the same parquet; skipped silently when python3/duckdb is absent.
-    duck = if (!runBlock("duckdb")) None else try {
-      val script = new java.io.File("tools/time_duckdb.py")
-      if (!script.exists()) None
-      else {
-        val prefixes = Seq("q_s", "q_p", "q_j", "q_u", "q_a", "q_w", "q_g", "q_t", "q_e2", "q_e3")
-        val rel = SparkEntry.oracleSql
-          .filter { case (n, _) => prefixes.exists(n.startsWith) }
-        val tmp = java.nio.file.Files.createTempFile("graft_oracle", ".json")
-        java.nio.file.Files.write(tmp,
-          rel.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-            .mkString("{", ",", "}").getBytes("UTF-8"))
-        // NOTE: this mandatory phase intentionally duplicates the
-        // subprocess/parse shape of runDuckTimer (defined later, used by
-        // the scaled tiers) because it additionally stamps
-        // errors("__duckdb") and halves its budget against the wall
-        // deadline — keep the pair regex and the -1.0/-2.0 marker
-        // conventions in sync with runDuckTimer and time_duckdb.py.
-        val basePb = new ProcessBuilder("python3", script.getPath, sfDir, tmp.toString)
-          .redirectErrorStream(true)
-        // ~60 oracles x 30 s worst case = 30 min on a contended box; the
-        // cumulative budget bounds that (quiet sf0.1 sweeps take 2-4 min).
-        // The budget additionally shrinks to half the remaining wall so
-        // this mandatory phase cannot blow the run deadline on a slow box
-        // (VERDICT r13 next #1a) — the Spark-side loops below carry the
-        // same guard.
-        val duckBudget = math.max(120,
-          math.min(480, ((wallDeadlineSec - elapsedSec) / 2).toInt))
-        basePb.environment().put("GRAFT_DUCK_TOTAL_BUDGET_S", duckBudget.toString)
-        val proc = basePb.start()
-        val outS = scala.io.Source.fromInputStream(proc.getInputStream).mkString.trim
-        val rc = proc.waitFor()
-        if (rc != 0 || outS.isEmpty) {
-          errors("__duckdb") = s"time_duckdb.py rc=$rc"
-          None
-        } else {
-          val pair = """"([^"]+)":\s*(-?[0-9.eE+]+)""".r
-          val duckSec = pair.findAllMatchIn(outS)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          // warm-vs-warm AND materialization-vs-materialization: the duck
-          // side executes the full SQL and fetchall()s, so the Spark side
-          // must collect() too — a count() lets Catalyst prune final
-          // projections and drop ORDER BYs, biasing the ratio in Spark's
-          // favor (ADVICE r3). Best-of-3, same as the duck side; cold
-          // first-run numbers stay in `queries`. r6 (ADVICE r5): the
-          // HEADLINE ratio runs on FRESH lineage per rep — plan paid
-          // every rep, no memoized handle, no skipped shuffle stages —
-          // so it compares like-for-like work with DuckDB's full
-          // re-execution; the handle-reuse serving mode is reported
-          // separately as median_ratio_cached_*.
-          // deadline guard for the three Spark-side timing loops: past
-          // the wall, remaining queries are dropped (counted in
-          // n_deadline_dropped so the shrunken median population is
-          // visible in the artifact, not silent)
-          var deadlineDropped = 0
-          def underDeadline[T](f: => T): Option[T] =
-            if (elapsedSec > wallDeadlineSec) { deadlineDropped += 1; None }
-            else Some(f)
-          val warmSec = duckSec.keys.toSeq.sorted.flatMap { n =>
-            SparkEntry.freshQueries.get(n).flatMap { fn => underDeadline {
-              fn(spark, sfDir).collect() // warm tables/codegen once
-              val t = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).collect()
-                (System.nanoTime() - t0) / 1e9
-              }.min
-              n -> t
-            }}
-          }.toMap
-          // cached-plan serving mode (PlanCache semantics): ONE DataFrame
-          // handle, re-collected — planning paid once. NOTE (ADVICE r4):
-          // re-executing the same handle lets Spark skip unchanged
-          // shuffle map stages, so this is the serving number on static
-          // data, NOT an execution-cost isolation — that is execSec below.
-          val cachedSec = duckSec.keys.toSeq.sorted.flatMap { n =>
-            SparkEntry.freshQueries.get(n).flatMap { fn => underDeadline {
-              val df = fn(spark, sfDir)
-              df.collect() // warm: triggers analysis + codegen once
-              val t = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                df.collect()
-                (System.nanoTime() - t0) / 1e9
-              }.min
-              n -> t
-            }}
-          }.toMap
-          // execution-cost isolation, unbiased (ADVICE r4): each rep
-          // builds a FRESH DataFrame (fresh RDD lineage — no skipped
-          // stages), and separately-measured planning time (fresh plan to
-          // executedPlan, best-of-3) is subtracted from the fresh
-          // per-call time. Approximation caveat: runtime codegen
-          // compilation sits on the execution side but hits Janino's
-          // cache after the first call.
-          val execSec = duckSec.keys.toSeq.sorted.flatMap { n =>
-            SparkEntry.freshQueries.get(n).flatMap { fn => underDeadline {
-              val planT = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).queryExecution.executedPlan
-                (System.nanoTime() - t0) / 1e9
-              }.min
-              val callT = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).collect()
-                (System.nanoTime() - t0) / 1e9
-              }.min
-              n -> math.max(callT - planT, 1e-4)
-            }}
-          }.toMap
-          val ratios = duckSec.toSeq.collect {
-            case (n, d) if d > 0 && warmSec.getOrElse(n, -1.0) > 0 =>
-              n -> warmSec(n) / d
-          }.sortBy(_._1)
-          def medianOf(rs: Seq[Double]): Double = {
-            val s = rs.sorted
-            if (s.isEmpty) -1.0 else s(s.size / 2)
-          }
-          val median = medianOf(ratios.map(_._2))
-          // the execution-dominated subset: where DuckDB itself does
-          // >= 50 ms of work, both engines are measuring execution, not
-          // Spark's fixed ~0.1 s planning/scheduling floor — this is the
-          // number that predicts relative cost at scale
-          val heavy = ratios.filter { case (n, _) => duckSec(n) >= 0.05 }
-          val medianHeavy = medianOf(heavy.map(_._2))
-          val execRatios = duckSec.toSeq.collect {
-            case (n, d) if d > 0 && execSec.getOrElse(n, -1.0) > 0 =>
-              n -> execSec(n) / d
-          }
-          val medianExecHeavy = medianOf(
-            execRatios.filter { case (n, _) => duckSec(n) >= 0.05 }.map(_._2))
-          val cachedRatios = duckSec.toSeq.collect {
-            case (n, d) if d > 0 && cachedSec.getOrElse(n, -1.0) > 0 =>
-              n -> cachedSec(n) / d
-          }
-          val medianCachedHeavy = medianOf(
-            cachedRatios.filter { case (n, _) => duckSec(n) >= 0.05 }.map(_._2))
-          val medianCachedAll = medianOf(cachedRatios.map(_._2))
-          // hand the scaled tiers (separate phases below) their inputs
-          duckSecBase = duckSec
-          relScaled = rel ++ SparkEntry.oracleSql.view
-            .filterKeys(scaledPins.contains).toMap
-          val over = ratios.filter(_._2 > 2.0).map(_._1)
-          val warmJson = warmSec.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jstr(k)}:${f"$v%.4f"}" }.mkString("{", ",", "}")
-          val execJson = execSec.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jstr(k)}:${f"$v%.4f"}" }.mkString("{", ",", "}")
-          val cachedJson = cachedSec.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jstr(k)}:${f"$v%.4f"}" }.mkString("{", ",", "}")
-          // duck_sec is REBUILT from the parsed map, never the raw
-          // subprocess output: stderr is merged into outS, so a single
-          // python/duckdb warning line spliced verbatim would corrupt
-          // the whole summary JSON (the r12 parsed:null failure mode)
-          // even though the regex extraction above tolerates it.
-          val duckJson = duckSec.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-          Some(
-            s""""duckdb":{"duck_sec":$duckJson,"spark_warm_sec":$warmJson,""" +
-            s""""spark_exec_sec":$execJson,""" +
-            s""""spark_cached_sec":$cachedJson,""" +
-            s""""n_compared":${ratios.size},""" +
-            s""""n_deadline_dropped":$deadlineDropped,""" +
-            // -1.0 = oracle errored/hit its per-query budget; -2.0 = never
-            // attempted, cumulative sweep budget spent (ADVICE r13 #4 —
-            // the two must stay distinguishable in the artifact, else
-            // budget cuts read as genuinely slow oracles)
-            s""""n_duck_timed_out":${duckSec.count(_._2 == -1.0)},""" +
-            s""""n_duck_budget_cut":${duckSec.count(_._2 == -2.0)},""" +
-            s""""duck_total_budget_s":$duckBudget,""" +
-            f""""median_ratio":$median%.3f,""" +
-            s""""n_heavy":${heavy.size},""" +
-            f""""median_ratio_heavy":$medianHeavy%.3f,""" +
-            f""""median_ratio_exec_heavy":$medianExecHeavy%.3f,""" +
-            f""""median_ratio_cached_heavy":$medianCachedHeavy%.3f,""" +
-            f""""median_ratio_cached":$medianCachedAll%.3f,""" +
-            s""""heavy":[${heavy.map(_._1).map(jstr).mkString(",")}],""" +
-            s""""over_2x":[${over.map(jstr).mkString(",")}],""" +
-            jstr("note") + ":" + jstr(
-              "both sides fully materialize (collect/fetchall), warm, " +
-              "best-of-N. median_ratio / median_ratio_heavy (heavy = " +
-              "DuckDB >= 50ms subset) now run on FRESH lineage per rep " +
-              "(plan paid every rep, no memoized handle, no skipped " +
-              "shuffle stages — like-for-like with DuckDB re-executing " +
-              "fully; ADVICE r5). median_ratio_cached_*: explicit " +
-              "handle-reuse serving mode (planning paid once, shuffle " +
-              "stages may be reused on static data). " +
-              "median_ratio_exec_heavy: fresh lineage with separately " +
-              "measured planning time subtracted — execution vs " +
-              "execution; see duckdb_scaled for the same number at a " +
-              "larger SF where the per-job floor amortizes") +
-            "}")
-        }
-      }
-    } catch {
-      case e: Throwable =>
-        errors("__duckdb") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("duckdb")
-    // ---- measured ANN recall (VERDICT r2 missing #1): mean over the 8
-    // query points of |ANN top-5 ∩ exact top-5| / 5, for the LSH and IVF
-    // paths. The per-point numbers are oracle-checked by CORRECTNESS.
-    recall = if (!runBlock("ann_recall") || shouldShed("ann_recall")) None else try {
-      def meanRecall(name: String): Double = {
-        val r = SparkEntry.queries(name)(spark, sfDir)
-          .agg(avg(col("recall"))).first().getDouble(0)
-        math.rint(r * 1e6) / 1e6
-      }
-      val v4dSweep = SparkEntry.queries("q_v4d_multiprobe_sweep")(spark, sfDir)
-        .select(col("ham"), col("mean_recall")).collect()
-        .map(r => r.getAs[Number](0).intValue -> r.getDouble(1)).toMap
-      def v4dAt(h: Int): Double =
-        math.rint(v4dSweep.getOrElse(h, -1.0) * 1e6) / 1e6
-      // default-path scan cost: the q_v4c sweep's row for the shipped
-      // (Bands, BitsPerBand) layout — recall without the admitted
-      // candidate fraction is meaningless.
-      val v4Frac = {
-        val r = SparkEntry.queries("q_v4c_band_sweep")(spark, sfDir)
-          .filter(col("n_bands") === graft.queries.VectorQueries.Bands &&
-            col("bits") === graft.queries.VectorQueries.BitsPerBand)
-          .select(col("mean_cand_frac")).first().getDouble(0)
-        math.rint(r * 1e6) / 1e6
-      }
-      Some(s""""ann_recall":{"v4b_lsh":${meanRecall("q_v4b_recall")},""" +
-        s""""v4_default_cand_frac":$v4Frac,""" +
-        s""""v4d_multiprobe_h1":${v4dAt(1)},""" +
-        s""""v4d_multiprobe_h2":${v4dAt(2)},""" +
-        s""""v6b_ivf":${meanRecall("q_v6b_recall")},""" +
-        s""""v6d_ivf_kmeans":${meanRecall("q_v6d_ivf_kmeans_recall")},""" +
-        // r11: q_v8b now hash-oracles the instrument's exact side; the
-        // walk's recall comes from the entry sweep's (probed, 8-shard)
-        // row — the identical searchShards configuration q_v8b measured
-        // pre-r11. r13: the sweep lives in VectorQueries.nswEntrySweep
-        // (registered q_v8d is now its hash-oracled exact baseline,
-        // VERDICT r12 next #7); the full measured matrix is stamped
-        // below as nsw_entry_sweep so the driver artifact keeps carrying
-        // the numbers the old rows-only q_v8d carried.
-        {
-          val sweep = graft.queries.VectorQueries
-            .nswEntrySweep(spark, sfDir).collect()
-          val v8b = {
-            val r = sweep.find(r =>
-              r.getString(0) == "probed" && r.getInt(1) == 8)
-              .map(_.getDouble(2)).getOrElse(-1.0)
-            math.rint(r * 1e6) / 1e6
-          }
-          val matrix = sweep.map { r =>
-            s"""{"entry":${jstr(r.getString(0))},"shards":${r.getInt(1)},""" +
-            s""""mean_recall":${r.getDouble(2)},""" +
-            s""""evals_per_search":${r.getDouble(3)}}"""
-          }.mkString("[", ",", "]")
-          s""""v8b_nsw":$v8b,"nsw_entry_sweep":$matrix,"""
-        } +
-        {
-          // trained-PQ pair (VERDICT r8 next #4): donor-vs-trained on
-          // degenerate-vs-clustered corpora is the whole IVFADC story —
-          // trained ADC-only >= 0.5 and constant-L rerank >= 0.9 are the
-          // IvfPqTrainedSpec pins, restated here as driver evidence.
-          val v11b = meanRecall("q_v11b_ivfpq_recall")
-          val v11c = meanRecall("q_v11c_ivfpq_rerank_recall")
-          val v12b = meanRecall("q_v12b_ivfpq_trained_recall")
-          val v12c = meanRecall("q_v12c_ivfpq_trained_rerank")
-          s""""v11b_ivfpq":$v11b,"v11c_ivfpq_rerank":$v11c,""" +
-          s""""v12b_ivfpq_trained":$v12b,"v12c_ivfpq_trained_rerank":$v12c,""" +
-          // PQ serve-mode policy (VERDICT r15 next #7, the int8
-          // serve_mode_default precedent): the artifact itself declares
-          // which IVFADC config is a serving configuration and which
-          // rows are deliberate instrumentation, with this run's
-          // recalls as the evidence.
-          s""""pq_serve_mode_default":{""" +
-          s""""mode":"trained codebook + exact top-L rerank",""" +
-          s""""rule":"PQ serves only with corpus-trained codebooks and a constant-L exact rerank; donor-codebook rows (v11b/v11c) are recall-floor instrumentation, never a serve config",""" +
-          s""""evidence":"this run recall@10: donor ADC $v11b, donor+rerank $v11c, trained ADC $v12b, trained+rerank $v12c; bytes: ivf_index.pq_bytes_ratio (~0.06x raw cells)",""" +
-          s""""serve_cost":"O(probed cells + L) per query"}}"""
-        })
-    } catch {
-      case e: Throwable =>
-        errors("__recall") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("ann_recall")
-    // ---- persisted-IVF amortization (VERDICT r4 missing #1): the
-    // build-once / serve-many model vs the in-plan rebuild-per-query
-    // path. build_sec = full index build (assignment + partitioned
-    // write); query_amortized_sec = mean of 10 searches against the
-    // PREBUILT index (centroid read + partition-pruned cell scan);
-    // rebuild_per_query_sec = the q_v6 in-plan path, best-of-3.
-    ivf = if (!runBlock("ivf_index") || shouldShed("ivf_index")) None else try {
-      import graft.operators.IvfIndex
-      val e = graft.sources.Tables.embeddings(spark, sfDir)
-      val k = graft.queries.VectorQueries.ivfK(e.count())
-      val np = graft.queries.VectorQueries.ivfNprobe(k)
-      val cents = e.filter(col("vec_id") < k)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
-      val path = System.getProperty("java.io.tmpdir") + "/graft_ivf_bench_" +
-        sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      // every build phase quiet-gated + stamped (VERDICT r11 what's-
-      // wrong #1 — same rationale as the NSW builds above)
-      val loadBuild = waitQuiet()
-      val buildCpu0 = cpuStat()
-      val buildSec = time { IvfIndex.buildIfAbsent(e, cents, path) }
-      val stealBuild = stealPct(buildCpu0, cpuStat())
-      val nQ = 10
-      // warm one search per variant before its timed loop: the first
-      // search pays the one-time whole-stage codegen compile (the serve
-      // code is query-invariant since r10, so it compiles once per plan
-      // SHAPE, not per query) — steady-state amortized latency is the
-      // number the block reports, and a ~100 ms compile inside a
-      // 10-rep loop was enough to flip the pq-vs-int8 comparison
-      def warmServe(p: String): Unit =
-        IvfIndex.searchTopK(spark, p,
-          graft.queries.VectorQueries.QueryVec, nprobe = np, k = 5).collect()
-      // best-of-3 amortized reps behind the loadavg quiet-gate (VERDICT
-      // r10 next #2): the r10 pq-vs-int8 comparison (0.0404 vs 0.0376)
-      // sat inside single-rep run noise; three gated reps with the min
-      // kept make the per-call comparison defensible either way, and
-      // the stamped loadavg proves the machine state of record.
-      def amortOf(p: String): Double =
-        (1 to 3).map { _ =>
-          time {
-            (1 to nQ).foreach { _ =>
-              IvfIndex.searchTopK(spark, p,
-                graft.queries.VectorQueries.QueryVec, nprobe = np, k = 5)
-                .collect()
-            }
-          } / nQ
-        }.min
-      val loadServe = waitQuiet()
-      warmServe(path)
-      val amortSec = amortOf(path)
-      // batched serving (r10, q_v6g): 12 distinct queries through ONE
-      // partition-pruned scan + broadcast probe join + per-qid k-heap —
-      // per-query cost of the production batch shape, vs the per-call
-      // jobs the amortized number above pays
-      val batchQs = graft.operators.VectorOps
-        .hyperplanes(12, graft.queries.VectorQueries.Dim, seed = 3L)
-        .zipWithIndex.map { case (q, i) => (i.toLong, q) }
-      IvfIndex.searchTopKBatch(spark, path, batchQs, nprobe = np, k = 5)
-        .collect() // warm (codegen + probe selection)
-      val loadBatch = waitQuiet()
-      val batchSec = time {
-        IvfIndex.searchTopKBatch(spark, path, batchQs, nprobe = np, k = 5)
-          .collect()
-      } / batchQs.size
-      val rebuildSec = best {
-        // freshQueries: the rebuild-per-query comparator must re-plan
-        // and re-derive the assignment, not hit the surface's plan memo
-        SparkEntry.freshQueries("q_v6_ivf_ann")(spark, sfDir).collect()
-      }
-      // int8-quantized variant (VERDICT r5 missing #2): cell bytes at
-      // rest vs the raw index, plus its amortized serve latency
-      val qPath = path + "_q"
-      fs.delete(new org.apache.hadoop.fs.Path(qPath), true)
-      val qLoadBuild = waitQuiet()
-      val qBuildCpu0 = cpuStat()
-      val qBuildSec = time {
-        IvfIndex.buildIfAbsent(e, cents, qPath, quantize = true)
-      }
-      val qStealBuild = stealPct(qBuildCpu0, cpuStat())
-      // int8-vs-raw build-cost guard (VERDICT r11 next #9): the staged
-      // quantize projection must stay a small constant over the raw
-      // build; armed only when both phases started quiet. r13 (VERDICT
-      // r12 next #2): quiet now ALSO means measured per-phase hypervisor
-      // steal < 0.5% — the r12 driver run armed this exact guard at
-      // loadavg 1.95 under 2-7.6% steal (36.1 s int8 vs 2.7 s raw was
-      // the BOX, not the plan) and stamped a fake n_failed:1. Unreadable
-      // steal (-1) never arms.
-      if (loadBuild >= 0 && loadBuild < 6.0 &&
-          qLoadBuild >= 0 && qLoadBuild < 6.0 &&
-          stealBuild >= 0 && stealBuild < 0.5 &&
-          qStealBuild >= 0 && qStealBuild < 0.5 &&
-          qBuildSec > 5.0 * math.max(buildSec, 0.5)) {
-        errors("__ivf_int8_build_guard") =
-          f"ivf int8 build $qBuildSec%.1fs > 5x raw $buildSec%.1fs on a " +
-            f"quiet box (steal $stealBuild%.2f/$qStealBuild%.2f%%)"
-      }
-      warmServe(qPath)
-      val qAmortSec = amortOf(qPath)
-      // PQ variant (VERDICT r6 next #8 — IVFADC): S=8 one-byte residual
-      // codes per vector; the at-rest payload production ANN runs at
-      // 100 TB. Recall cost is reported next door (ann_recall.v11b).
-      val pqPath = path + "_pq"
-      fs.delete(new org.apache.hadoop.fs.Path(pqPath), true)
-      val pqLoadBuild = waitQuiet()
-      val pqBuildSec = time { IvfIndex.buildPqIfAbsent(e, cents, pqPath) }
-      warmServe(pqPath)
-      val pqAmortSec = amortOf(pqPath)
-      IvfIndex.searchTopKBatch(spark, pqPath, batchQs, nprobe = np, k = 5)
-        .collect() // warm the gp-indexed ADC batch plan
-      // the r11 pq_batched-of-record (0.142 vs 0.014-0.017 quiet) was
-      // exactly this span running unguarded right after the PQ build
-      val pqLoadBatch = waitQuiet()
-      val pqBatchSec = time {
-        IvfIndex.searchTopKBatch(spark, pqPath, batchQs, nprobe = np, k = 5)
-          .collect()
-      } / batchQs.size
-      val rawBytes = IvfIndex.cellBytes(spark, path)
-      val qBytes = IvfIndex.cellBytes(spark, qPath)
-      val pqBytes = IvfIndex.cellBytes(spark, pqPath)
-      // batched per-query cost LEADS the block (VERDICT r10 next #6):
-      // batch serving is the production shape — per-call amortized
-      // numbers pay a full Spark job per query and understate the engine
-      Some(f""""ivf_index":{"batch_size":${batchQs.size},""" +
-        f""""batched_query_sec":$batchSec%.4f,""" +
-        f""""pq_batched_query_sec":$pqBatchSec%.4f,""" +
-        f""""loadavg_serve":$loadServe%.2f,""" +
-        f""""loadavg_batch":$loadBatch%.2f,""" +
-        f""""pq_loadavg_batch":$pqLoadBatch%.2f,""" +
-        f""""loadavg_build":$loadBuild%.2f,""" +
-        f""""steal_build":$stealBuild%.2f,""" +
-        f""""int8_loadavg_build":$qLoadBuild%.2f,""" +
-        f""""int8_steal_build":$qStealBuild%.2f,""" +
-        f""""pq_loadavg_build":$pqLoadBuild%.2f,""" +
-        f""""build_sec":$buildSec%.3f,""" +
-        f""""query_amortized_sec":$amortSec%.4f,""" +
-        f""""rebuild_per_query_sec":$rebuildSec%.4f,""" +
-        s""""cell_bytes_raw":$rawBytes,"cell_bytes_int8":$qBytes,""" +
-        f""""int8_bytes_ratio":${qBytes.toDouble / math.max(rawBytes, 1L)}%.3f,""" +
-        f""""int8_build_sec":$qBuildSec%.3f,""" +
-        f""""int8_query_amortized_sec":$qAmortSec%.4f,""" +
-        s""""cell_bytes_pq":$pqBytes,""" +
-        f""""pq_bytes_ratio":${pqBytes.toDouble / math.max(rawBytes, 1L)}%.3f,""" +
-        f""""pq_build_sec":$pqBuildSec%.3f,""" +
-        f""""pq_query_amortized_sec":$pqAmortSec%.4f}""")
-    } catch {
-      case e: Throwable =>
-        errors("__ivf_index") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("ivf_index")
-    // ---- dedup scaling instrument (r9): the MinHash/LSH family's
-    // linear-scaling claim, measured instead of plan-read. The corpus
-    // grows with DISTINCT documents: each replica's text runs through a
-    // DIFFERENT consonant-rotation `translate`, which rewrites most
-    // 3-shingles, so cross-replica Jaccard collapses below the 0.5
-    // gate and each replica only carries its own internal dup
-    // structure — pairs grow ~mult-fold, like real corpus growth. (A
-    // suffix-only perturbation measured 211x pair growth: every
-    // replica was still a near-dup of its source, i.e. C(mult,2)
-    // duplicate blowup, not blocking cost.) Signatures are persisted
-    // and warmed before timing, so the timed span is the
-    // scaling-critical stage: banding, hot-bucket cap, bucket
-    // self-join, signature rejoin, jaccard filter.
-    dedupScaled = if (!runBlock("dedup_scaled") || shouldShed("dedup_scaled")) None else try {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val baseDocs = docs.count()
-      val alpha = "etaoinshrdlu"
-      val beta = "bcfgmpwyvk"
-      def corpusAt(mult: Int) =
-        if (mult == 1) docs
-        else (0 until mult).map { rep =>
-          // two independent rotations -> alpha.length * beta.length
-          // distinct variants, so no replica pair shares a mapping
-          val rotA = alpha.drop(rep % alpha.length) + alpha.take(rep % alpha.length)
-          val b = (rep / alpha.length) % beta.length
-          val rotB = beta.drop(b) + beta.take(b)
-          docs.select(
-            (col("doc_id") + lit(rep * 50000000L)).as("doc_id"),
-            (if (rep == 0) col("text")
-             else translate(translate(col("text"), alpha, rotA), beta, rotB)).as("text"))
-        }.reduce(_ unionByName _)
-      def timeAt(mult: Int): (Double, Long) = {
-        val sigs = graft.queries.DedupQueries.sigTable(
-          corpusAt(mult), s"bench.dedup.x$mult")
-        sigs.count() // materialize signatures outside the timed span
-        var pairs = 0L
-        val sec = (1 to 2).map(_ => time {
-          pairs = graft.queries.DedupQueries.lshPairs(sigs)
-            .filter(col("est_jaccard") >= 0.5).count()
-        }).min
-        (sec, pairs)
-      }
-      // warm the STAGE before the x1 point (VERDICT r9 what's-wrong #4):
-      // the first lshPairs execution in this JVM absorbs codegen +
-      // banding-stage warmup that the later multiples don't pay, which
-      // made x1 read 2x slower than x5 and the ratios nonsense — the
-      // discarded run leaves x1..x25 measuring blocking cost alone
-      timeAt(1)
-      // default ladder 1/5/25; SPARK_GRAFT_DEDUP_MULTS extends it for
-      // one-off deep-scale artifacts (VERDICT r12 next #5 — the ANN
-      // ladders reach x100, dedup stopped at x25): "1,5,25,100" puts
-      // 500k distinct docs through the banded pair stage. The two
-      // rotation alphabets give 12*10 = 120 distinct consonant maps, so
-      // every mult <= 120 keeps cross-replica Jaccard collapsed.
-      val mults = sys.env.getOrElse("SPARK_GRAFT_DEDUP_MULTS", "1,5,25")
-        .split(",").map(_.trim.toInt).toSeq
-      val pts = mults.map(m => m -> timeAt(m))
-      // pairs growing ~mult-fold certifies the corpus is distinct-doc
-      // growth; the wall ratios then read as blocking cost, which
-      // amortizes fixed overhead (measured: 25x docs ~ 2x wall)
-      val body = pts.map { case (m, (s, p)) =>
-        f""""x${m}_sec":$s%.3f,"x${m}_pairs":$p"""
-      }.mkString(",")
-      val s1 = pts.head._2._1
-      val ratios = pts.tail.map { case (m, (s, _)) =>
-        f""""ratio_x$m":${s / math.max(s1, 1e-9)}%.2f"""
-      }
-      val fields = (Seq(s""""base_docs":$baseDocs""", body) ++ ratios)
-        .filter(_.nonEmpty).mkString(",")
-      Some(s""""dedup_scaled":{$fields}""")
-    } catch {
-      case e: Throwable =>
-        errors("__dedup_scaled") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("dedup_scaled")
-    // ---- ANN serve scaling instrument (r10): the dedup_scaled
-    // treatment applied to the vector-serving claim. The int8 IVF index
-    // (the reference's always-RAM scalar-quantized config) is built on
-    // synthetic corpora at x1/x5/x25 and served with the PRODUCTION
-    // discipline — a FIXED nprobe, not ivfNprobe(k) which widens the
-    // probe with the corpus. Because ivfK keeps mean cell size at
-    // ~TargetCellRows regardless of n, a fixed-nprobe serve touches
-    // nprobe*TargetCellRows rows at ANY corpus size: the probed byte
-    // volume at x25 equals x1's, and the amortized latency should read
-    // ~flat while the corpus grows 25x. x*_probed certifies the
-    // constant probe volume; the build times carry IVF's honest n*k
-    // assignment cost (the one-off a 100 TB build pays once, serve
-    // never).
-    //
-    // r11 (VERDICT r10 what's-wrong #1): two evidence fixes. (a) The
-    // r10 coarse quantizer seeded centroids from the FIRST k corpus
-    // vectors — on the sin-ramp corpus those are near-collinear, so
-    // cells were wildly skewed (x5 probed 48% of the corpus through 8
-    // cells; x25's query landed in starved cells holding 0.65%) and the
-    // flat serve time was uninterpretable. Seeds are now STRATIFIED —
-    // every (n/k)-th vector, spread across the full ramp — so cell
-    // population is ~TargetCellRows everywhere and x*_probed reads
-    // ~nprobe*TargetCellRows by construction. (b) recall@10 vs the
-    // exact brute-force top-10 on the same corpus is stamped PER POINT
-    // (x*_recall10), so the flat serve-time claim carries the accuracy
-    // it buys; x*_probed_frac makes the shrinking-fraction-constant-
-    // rows design explicit rather than inferred.
-    annScaled = if (!runBlock("ann_scaled") || shouldShed("ann_scaled")) None else try {
-      import graft.operators.IvfIndex
-      val dim = graft.queries.VectorQueries.Dim
-      val baseN = 20000L
-      val servNprobe = 8
-      val annFs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      case class AnnPoint(n: Long, kCells: Long, buildSec: Double,
-        amortSec: Double, probed: Long, recall10: Double)
-      def timeAt(mult: Int): AnnPoint = {
-        val n = baseN * mult
-        // distinct synthetic vectors (same rule as the kNN probe, a
-        // per-dim frequency ramp) persisted so the timed spans see
-        // materialized input, not the sin() generation plan
-        val e = spark.range(n).select(
-          col("id").as("vec_id"),
-          // (id+1): no all-zero row — assignCells/serve score with the
-          // ANSI-unguarded SQL cosine (see the kNN probe note above)
-          array((0 until dim).map(d =>
-            sin((col("id") + 1).cast("double") * (d * 7 + 3) * 1e-4)): _*)
-            .as("embedding"),
-          (col("id") % 10).cast("int").as("label")).persist()
-        e.count()
-        val k = graft.queries.VectorQueries.ivfK(n)
-        // stratified seeds: every stride-th vector — spread across the
-        // whole frequency ramp so cells hold ~TargetCellRows each (the
-        // r10 first-k seeding bunched all centroids at the ramp's start
-        // and skewed cell population 70x; see block comment)
-        val stride = math.max(1L, n / k)
-        val cents = e.filter(col("vec_id") % stride === 0)
-          .select((col("vec_id") / stride).cast("long").as("cent_id"),
-            col("embedding").as("cvec"))
-        val kCells = cents.count()
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_annscaled_x${mult}_" +
-          sfDir.replaceAll("[^A-Za-z0-9]", "_")
-        annFs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val buildSec = time {
-          IvfIndex.buildIfAbsent(e, cents, path, quantize = true)
-        }
-        // query = the corpus formula at virtual id 10000 — NOT the random
-        // hyperplane QueryVec. On the sin-ramp corpus a random query's
-        // exact top-10 are near-ties that int8 noise reorders (recall
-        // reads 0 regardless of probe quality — the adversarial-corpus
-        // effect the NSW bench documents); a corpus-locality query has
-        // well-separated neighbors (ids near 10000), and because the
-        // corpora are NESTED (x25's first 20k ids = x1's corpus), the
-        // exact top-10 is the SAME set at every point — recall change
-        // across scales isolates probe-selection quality as k grows.
-        val qv: Seq[Double] =
-          (0 until dim).map(d => math.sin(10001.0 * (d * 7 + 3) * 1e-4))
-        // quiet-gate before the serve timings (same rationale as the NSW
-        // serves): the x25 build is ~40 s of 32-thread work ending right
-        // here, and serve_ratio_x25 swung 1.09–1.76 across r11 runs with
-        // the build's loadavg tail as the only variable
-        waitQuiet()
-        // first serve pays centroid-cache load; amortized is the number
-        val approxIds = IvfIndex
-          .searchTopK(spark, path, qv, nprobe = servNprobe, k = 10)
-          .collect().map(_.getLong(0)).toSet
-        val nQ = 10
-        val amort = time {
-          (1 to nQ).foreach { _ =>
-            IvfIndex.searchTopK(spark, path, qv, nprobe = servNprobe, k = 10)
-              .collect()
-          }
-        } / nQ
-        val probed = IvfIndex.probedRows(spark, path, qv, servNprobe)
-        // recall@10 vs the exact brute-force top-10 on the SAME corpus
-        // and tie order — the accuracy the fixed-nprobe serve buys
-        val exactIds = e
-          .withColumn("score",
-            graft.operators.VectorOps.cosine(col("embedding"), typedLit(qv)))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(10).select("vec_id")
-          .collect().map(_.getLong(0)).toSet
-        val recall = approxIds.intersect(exactIds).size / 10.0
-        e.unpersist()
-        annFs.delete(new org.apache.hadoop.fs.Path(path), true)
-        AnnPoint(n, kCells, buildSec, amort, probed, recall)
-      }
-      timeAt(1) // discard: codegen + parquet-reader warmup (dedup_scaled's x1 lesson)
-      // default ladder 1/5/25; SPARK_GRAFT_ANN_MULTS extends it for
-      // one-off deep-scale artifacts (e.g. "1,5,25,100" → a 2M-vector
-      // point: build grows ~linearly with n·k, serve must stay ~flat at
-      // constant probed rows, recall stays measured)
-      val mults = sys.env.getOrElse("SPARK_GRAFT_ANN_MULTS", "1,5,25")
-        .split(",").map(_.trim.toInt).toSeq
-      val pts = mults.map(m => m -> timeAt(m))
-      val body = pts.map { case (m, p) =>
-        s""""x${m}_n":${p.n},"x${m}_cells":${p.kCells},""" +
-          f""""x${m}_build_sec":${p.buildSec}%.3f,""" +
-          f""""x${m}_serve_sec":${p.amortSec}%.4f,""" +
-          s""""x${m}_probed":${p.probed},""" +
-          f""""x${m}_probed_frac":${p.probed.toDouble / p.n}%.4f,""" +
-          f""""x${m}_recall10":${p.recall10}%.2f"""
-      }.mkString(",")
-      val a1 = pts.head._2.amortSec
-      val ratios = pts.tail.map { case (m, p) =>
-        f""""serve_ratio_x$m":${p.amortSec / math.max(a1, 1e-9)}%.2f"""
-      }
-      // a single-entry SPARK_GRAFT_ANN_MULTS leaves no ratio fields;
-      // filtering empties keeps the JSON valid (ADVICE r11)
-      val fields = (Seq(s""""dim":$dim,"nprobe":$servNprobe""", body) ++ ratios)
-        .filter(_.nonEmpty).mkString(",")
-      Some(s""""ann_scaled":{$fields}""")
-    } catch {
-      case e: Throwable =>
-        errors("__ann_scaled") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("ann_scaled")
-    // ---- scaled-GRAPH ladder (VERDICT r11 next #6): ann_scaled proves
-    // the IVF serve flat to x100, but the reference's actual serving
-    // config is the GRAPH index (HNSW, init_qdrant.py:45-50) and it had
-    // no scaled point — its build/serve story rode the fixed-size bench
-    // corpus only. Same nested sin-ramp corpora and corpus-locality
-    // query as ann_scaled (the exact top-10 is the same set at every
-    // point, so recall change isolates navigation quality as shards
-    // fill), layered build = the reference's hierarchy config; serve at
-    // a fixed ef so the cost knob is pinned across scales. first_search
-    // re-pays the per-executor graph load (evictServed per rep); serve
-    // is the resident-graph amortized number.
-    nswScaled = if (!runBlock("nsw_scaled") || shouldShed("nsw_scaled")) None else try {
-      import graft.operators.NswIndex
-      // SPARK_GRAFT_NSW_DIM runs the ladder at another dimensionality
-      // (VERDICT r12 next #6: the default 64-d synthetic corpus leaves
-      // the reference's 768-d serving regime — init_qdrant.py:41 —
-      // unmeasured; a one-off archived 768-d run closes that)
-      val dim = sys.env.get("SPARK_GRAFT_NSW_DIM").map(_.trim.toInt)
-        .getOrElse(graft.queries.VectorQueries.Dim)
-      val baseN = 20000L
-      val ef = 64
-      val nswSFs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      case class NswPoint(n: Long, buildSec: Double, firstSec: Double,
-        amortSec: Double, recall10: Double, bytes: Long,
-        residentBytes: Long)
-      val cores = Runtime.getRuntime.availableProcessors()
-      // Per-shard row budget shrinks with dimensionality: a build group
-      // holds its shard graphs in heap at once (rows × dim doubles plus
-      // the boxed Row transient); ~16k rows/shard at 768-d measured
-      // ~45 GB peak for a 32-shard group on this box. The 64-d ladder
-      // keeps its historical cores-shards single-group shape (budget
-      // 234k rows/shard ≥ every ladder point), so prior boards compare.
-      val shardRowBudget = math.max(20000L, 15000000L / dim)
-      def timeAt(mult: Int, quantize: Boolean = false): NswPoint = {
-        val n = baseN * mult
-        val numShards = ((((n + shardRowBudget - 1) / shardRowBudget)
-          + cores - 1) / cores * cores).toInt.max(cores)
-        val e = spark.range(n).select(
-          col("id").as("vec_id"),
-          array((0 until dim).map(d =>
-            sin((col("id") + 1).cast("double") * (d * 7 + 3) * 1e-4)): _*)
-            .as("embedding")).persist()
-        e.count()
-        val qv: Seq[Double] =
-          (0 until dim).map(d => math.sin(10001.0 * (d * 7 + 3) * 1e-4))
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_nswscaled_x${mult}${if (quantize) "_q" else ""}_" +
-          sfDir.replaceAll("[^A-Za-z0-9]", "_")
-        nswSFs.delete(new org.apache.hadoop.fs.Path(path), true)
-        waitQuiet()
-        val buildSec = time {
-          NswIndex.buildIfAbsent(e, "vec_id", "embedding", path,
-            graft.operators.GraphAnn.Params(layered = true),
-            numShards = numShards, quantize = quantize,
-            buildGroupShards = cores)
-        }
-        waitQuiet()
-        val firstSec = (1 to 2).map { _ =>
-          NswIndex.evictServed(path)
-          time { NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef).collect() }
-        }.min
-        val nQ = 10
-        // GC before timing + best-of-3 batches, same discipline as
-        // firstSec: a single batch right after a 32-core build samples
-        // the post-build GC tail (read 3-6x noise on r14 points — the
-        // builds allocate tens of GB of transient boxed rows, and the
-        // collector's debt lands on whatever runs next)
-        System.gc()
-        val amort = (1 to 3).map { _ =>
-          time {
-            (1 to nQ).foreach { _ =>
-              NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef).collect()
-            }
-          } / nQ
-        }.min
-        val annIds = NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef)
-          .collect().map(_.getLong(0)).toSet
-        val exactIds = e
-          .withColumn("score",
-            graft.operators.VectorOps.cosine(col("embedding"), typedLit(qv)))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(10).select("vec_id")
-          .collect().map(_.getLong(0)).toSet
-        val recall = annIds.intersect(exactIds).size / 10.0
-        val bytes = NswIndex.graphBytes(spark, path)
-        // resident footprint while the shards are still cached (int8
-        // serves hold q8+scale natively — this is where the ~8x shows)
-        val residentBytes = NswIndex.residentBytesFor(path)
-        e.unpersist()
-        // drop THIS point's resident state (persisted row cache + shard
-        // graphs) before the next one starts: at 768-d a single x100
-        // point holds ~25 GB, and letting points accumulate until the
-        // byte-budget evicts them OOMs the ladder JVM (seen live r14)
-        NswIndex.evictServed(path)
-        nswSFs.delete(new org.apache.hadoop.fs.Path(path), true)
-        NswPoint(n, buildSec, firstSec, amort, recall, bytes, residentBytes)
-      }
-      timeAt(1) // discard: codegen + reader warmup, same as ann_scaled
-      val mults = sys.env.getOrElse("SPARK_GRAFT_NSW_MULTS", "1,5,25")
-        .split(",").map(_.trim.toInt).toSeq
-      val pts = mults.map(m => m -> timeAt(m))
-      val body = pts.map { case (m, p) =>
-        s""""x${m}_n":${p.n},""" +
-          f""""x${m}_build_sec":${p.buildSec}%.3f,""" +
-          f""""x${m}_first_sec":${p.firstSec}%.3f,""" +
-          f""""x${m}_serve_sec":${p.amortSec}%.4f,""" +
-          f""""x${m}_recall10":${p.recall10}%.2f,""" +
-          s""""x${m}_resident_bytes":${p.residentBytes}"""
-      }.mkString(",")
-      // SPARK_GRAFT_NSW_INT8=<mult>[,<mult>...]: extra points at those
-      // mults with int8-quantized payloads — the reference's actual
-      // serving config (HNSW + scalar int8, always_ram —
-      // init_qdrant.py:51-57; VERDICT r13 next #5). Stamps
-      // serve/recall/bytes next to the raw points so the ratio is read
-      // off one artifact. Off by default: the default bench should not
-      // pay second top-mult builds.
-      val int8Pts = sys.env.getOrElse("SPARK_GRAFT_NSW_INT8", "")
-        .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        .map(m => m -> timeAt(m, quantize = true))
-      val int8Body = int8Pts
-        .map { case (m, p) =>
-          // raw_bytes only when the raw ladder measured this mult — a
-          // literal 0 would read as infinite compression downstream
-          pts.find(_._1 == m).map(_._2.bytes)
-            .map(b => s""""x${m}_raw_bytes":$b,""").getOrElse("") +
-            s""""x${m}_int8_bytes":${p.bytes},""" +
-            f""""x${m}_int8_build_sec":${p.buildSec}%.3f,""" +
-            f""""x${m}_int8_first_sec":${p.firstSec}%.3f,""" +
-            f""""x${m}_int8_serve_sec":${p.amortSec}%.4f,""" +
-            f""""x${m}_int8_recall10":${p.recall10}%.2f,""" +
-            s""""x${m}_int8_resident_bytes":${p.residentBytes}"""
-        }
-      val a1 = pts.head._2.amortSec
-      val ratios = pts.tail.map { case (m, p) =>
-        f""""serve_ratio_x$m":${p.amortSec / math.max(a1, 1e-9)}%.2f"""
-      }
-      // serve-mode policy stamp (VERDICT r14 next #5): at 768-d the raw
-      // resident graph is n*dim*8 B of vector payload plus links —
-      // 12.37 GB at x100 (2M vectors) with a 48 s first-search load,
-      // while the int8 index is 0.13x the bytes at serve parity
-      // (0.0695 s vs 0.0693 s) and measured recall@10 = 1.00
-      // (bench_nsw_scaled_768d.json). Policy: int8 is the DEFAULT serve
-      // representation once raw vector payload (n*dim*8 B) exceeds
-      // ~4 GiB per executor — at 768-d that is ~650k vectors, i.e.
-      // every >=x25 ladder tier; raw stays the build-time geometry and
-      // the exact rerank path. Stamped so the ladder artifact carries
-      // the default, not just the two measurement series.
-      // evidence is parameterized from THIS run's measured points
-      // (ADVICE r15: the hardcoded 768-d x100 text went stale the moment
-      // the ladder ran at another dim) — fall back to the archived
-      // 768-d citation only when the run carries no int8 tier itself
-      val evidence = int8Pts.lastOption.flatMap { case (m, p) =>
-        pts.find(_._1 == m).map { case (_, raw) =>
-          f"x$m $dim%d-d (this run): int8 ${p.bytes.toDouble / math.max(raw.bytes, 1L)}%.2fx bytes, " +
-            f"serve ${p.amortSec}%.4fs vs raw ${raw.amortSec}%.4fs, recall@10 ${p.recall10}%.2f"
-        }
-      }.getOrElse("archived x100 768-d ladder (bench_nsw_scaled_768d.json): " +
-        "int8 0.13x bytes, serve parity 0.0695s vs 0.0693s, recall@10 1.00")
-      val servePolicy =
-        s""""serve_mode_default":{"rule":"int8 once n*dim*8B > 4GiB/executor",""" +
-        s""""dim":$dim,"raw_payload_cap_vectors":${4294967296L / (dim.toLong * 8)},""" +
-        s""""evidence":${jstr(evidence)},""" +
-        s""""raw_role":"build geometry + exact rerank"}"""
-      val fields = (Seq(s""""dim":$dim,"ef":$ef""", servePolicy, body) ++
-          int8Body ++ ratios)
-        .filter(_.nonEmpty).mkString(",")
-      Some(s""""nsw_scaled":{$fields}""")
-    } catch {
-      case e: Throwable =>
-        errors("__nsw_scaled") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("nsw_scaled")
-    // ---- streaming ingest throughput probe (r11): the X-family queries
-    // gate stream/batch SEMANTICS through tiny MemoryStream harnesses
-    // (their wall time is harness plumbing, excluded from totals) — this
-    // block measures the PRODUCTION ingest shape instead: a checkpointed
-    // parquet file-source stream processed in multiple real micro-batches
-    // (Trigger.AvailableNow honoring maxFilesPerTrigger), reported as
-    // end-to-end events/s.
-    //  (a) agg: the X1/X8 watermarked tumbling 1-hour aggregation into
-    //      the no-op streaming sink — pure operator+micro-batch cost;
-    //  (b) tick: the X2 incremental-recompute foreachBatch
-    //      ([[graft.streaming.IncrementalTick]]) — each batch re-reads
-    //      the partition-pruned sink tail, recomputes the frame pack and
-    //      appends only new rows, i.e. the reference's hourly-tick DAG
-    //      at micro-batch cadence, INCLUDING its sink reads/writes.
-    // Events flow through the same 5-column schema the X queries use;
-    // the staged input is split into 16 parquet files so AvailableNow
-    // yields 4 micro-batches of 4 files — multi-batch overhead (offset
-    // log, state commit, sink listing) is inside the measured wall, not
-    // assumed away.
-    //
-    // Placement is deliberate and MEASURED: this block runs LATE (after
-    // the sweep + index builds) even though the machine loadavg is high
-    // there, because micro-batch streaming cost at this event count is
-    // dominated by per-batch planning/codegen, which needs a hot JVM —
-    // relocating it to the quiet pre-sweep phase measured 6.1k/4.4k
-    // events/s (cold JIT) vs 26–31k here. The stamped loadavg_start
-    // carries the contention caveat honestly; a cold-start number would
-    // be the bigger lie about steady-state ingest.
-    streamTp = if (!runBlock("streaming_tp") || shouldShed("streaming_tp")) None else try {
-      import org.apache.spark.sql.streaming.Trigger
-      val sFs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val root = System.getProperty("java.io.tmpdir") + "/graft_streambench_" +
-        sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      sFs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val inDir = root + "/in"
-      graft.sources.Tables.events(spark, sfDir)
-        .select(col("event_id"), col("ts"), col("ts_ns"), col("user_id"),
-          col("value"))
-        .repartition(16).write.parquet(inDir)
-      val staged = spark.read.parquet(inDir)
-      val n = staged.count()
-      val sch = staged.schema
-      def fileStream = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 4).parquet(inDir)
-      val loadStream = loadAvg()
-      // batch counts are OBSERVED from the query's progress log, not
-      // asserted (ADVICE r11: repartition(16) can emit fewer non-empty
-      // files and AvailableNow's actual micro-batch count may differ
-      // from the 4 the staging aims for)
-      def runToEnd(start: => org.apache.spark.sql.streaming.StreamingQuery)
-          : (Double, Int) = {
-        val t0 = System.nanoTime()
-        val q = start
-        q.awaitTermination()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (sec, q.recentProgress.count(_.numInputRows > 0))
-      }
-      val (aggSec, aggBatches) = runToEnd {
-        fileStream
-          .withWatermark("ts", "2 hours")
-          .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
-          .writeStream.format("noop").outputMode("update")
-          .option("checkpointLocation", root + "/ckpt_agg")
-          .trigger(Trigger.AvailableNow()).start()
-      }
-      graft.streaming.IncrementalTick.Phases.reset()
-      val (tickSec, tickBatches) = runToEnd {
-        graft.streaming.IncrementalTick.startStream(
-          fileStream, root + "/tick_sink", root + "/ckpt_tick",
-          Trigger.AvailableNow())
-      }
-      // where the tick time goes (VERDICT r11 next #7), two views:
-      //  (a) in-stream: probe (min-ts agg + coverage checks, real sink
-      //      reads) vs the fused append job, accumulated across the
-      //      measured batches; the remainder to tick_sec is micro-batch
-      //      machinery (offset log, commit, planning);
-      //  (b) post-hoc decomposition of ONE append job's fused
-      //      read→kernel→write on the final sink state — the stages
-      //      execute as one job in production, so the split is measured
-      //      by running each prefix separately and differencing.
-      val tickProbeSec = graft.streaming.IncrementalTick.Phases.probeSec
-      val tickAppendSec = graft.streaming.IncrementalTick.Phases.appendSec
-      val tickSinkPath = root + "/tick_sink"
-      val tickCols = Seq("event_id", "ts", "ts_ns", "user_id", "value")
-      val maxTsNs = spark.read.parquet(tickSinkPath)
-        .agg(max(col("ts_ns"))).first().getLong(0)
-      def tickTail = graft.streaming.IncrementalTick
-        .prunedSlice(spark, tickSinkPath, maxTsNs,
-          graft.streaming.IncrementalTick.Lookback.toLong)
-        .select(tickCols.map(col): _*)
-      val decompReadSec = time { tickTail.count() }
-      // an agg over the kernel OUTPUTS — a bare count() lets Catalyst
-      // prune the window kernels entirely and times another tail read
-      val decompKernelTotal = time {
-        graft.streaming.IncrementalTick.enrich(tickTail)
-          .agg(sum(col("sma30")), sum(col("bb_up")), sum(col("bb_lo")),
-            count(when(col("buy"), 1)))
-          .collect()
-      }
-      val decompScratch = root + "/decomp_out"
-      val decompWriteTotal = time {
-        graft.streaming.IncrementalTick.enrich(tickTail)
-          .write.mode("overwrite").parquet(decompScratch)
-      }
-      val tickRows = spark.read.parquet(tickSinkPath).count()
-      sFs.delete(new org.apache.hadoop.fs.Path(root), true)
-      Some(s""""streaming_tp":{"n_events":$n,""" +
-        s""""agg_batches":$aggBatches,"tick_batches":$tickBatches,""" +
-        f""""agg_sec":$aggSec%.3f,""" +
-        s""""agg_events_per_s":${(n / math.max(aggSec, 1e-9)).toLong},""" +
-        f""""tick_sec":$tickSec%.3f,""" +
-        s""""tick_events_per_s":${(n / math.max(tickSec, 1e-9)).toLong},""" +
-        f""""tick_probe_sec":$tickProbeSec%.3f,""" +
-        f""""tick_append_sec":$tickAppendSec%.3f,""" +
-        f""""tick_harness_sec":${math.max(tickSec - tickProbeSec - tickAppendSec, 0.0)}%.3f,""" +
-        f""""tick_decomp_tail_read_sec":$decompReadSec%.3f,""" +
-        f""""tick_decomp_kernel_sec":${math.max(decompKernelTotal - decompReadSec, 0.0)}%.3f,""" +
-        f""""tick_decomp_write_sec":${math.max(decompWriteTotal - decompKernelTotal, 0.0)}%.3f,""" +
-        s""""tick_sink_rows":$tickRows,""" +
-        f""""loadavg_start":$loadStream%.2f}""")
-    } catch {
-      case e: Throwable =>
-        errors("__streaming_tp") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("streaming_tp")
-    // ---- scaled-SF execution proof (VERDICT r5 next #3): the r5 claim
-    // "median_ratio_exec_heavy ~3 at sf0.1 is per-job scheduling floor
-    // that amortizes with data volume" — measured, not asserted. A
-    // 5x-replicated copy of the SF (keys shifted per replica so joins
-    // stay 1:1 and series counts grow like real SF growth; dimension
-    // tables kept single) is generated once into tmp, and the SAME
-    // heavy-subset exec-isolation ratio is measured there: if the floor
-    // amortizes, the scaled ratio drops toward (and under) 2.
-    def writeOracleJson(m: Map[String, String]): java.nio.file.Path = {
-      val tmp = java.nio.file.Files.createTempFile("graft_oracle", ".json")
-      java.nio.file.Files.write(tmp,
-        m.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-          .mkString("{", ",", "}").getBytes("UTF-8"))
-      tmp
-    }
-    def runDuckTimer(dir: String, oracle: java.nio.file.Path,
-        perQueryBudgetSec: Int = 30,
-        totalBudgetSec: Int = 600): Option[Map[String, Double]] = {
-      val script = new java.io.File("tools/time_duckdb.py")
-      if (!script.exists()) None
-      else {
-        // stderr merged so the pipe can't fill and deadlock (ADVICE r6);
-        // the regex scan tolerates interleaved warning lines.
-        val pb = new ProcessBuilder(
-          "python3", script.getPath, dir, oracle.toString)
-          .redirectErrorStream(true)
-        pb.environment().put("GRAFT_DUCK_TIMEOUT_S", perQueryBudgetSec.toString)
-        // CUMULATIVE sweep budget (VERDICT r12 next #1): on the r12
-        // driver's contended box every x10 oracle individually hit the
-        // 120 s budget — 22 x 120 s of timeouts. Once the sweep's total
-        // wall crosses this, remaining queries stamp -1 (duck_timed_out)
-        // immediately instead of each burning a full per-query budget.
-        pb.environment().put("GRAFT_DUCK_TOTAL_BUDGET_S", totalBudgetSec.toString)
-        val proc = pb.start()
-        val outS = scala.io.Source.fromInputStream(proc.getInputStream).mkString.trim
-        val rc = proc.waitFor()
-        if (rc != 0 || outS.isEmpty) None
-        else {
-          val pair = """"([^"]+)":\s*(-?[0-9.eE+]+)""".r
-          Some(pair.findAllMatchIn(outS)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-        }
-      }
-    }
-    // Floor-attribution notes (VERDICT r14 next #2): a query whose
-    // scaled ratio sits above 2x DuckDB carries its measured WHY in the
-    // artifact itself, with the alternatives that were tried and
-    // rejected — so a reader never has to take "floor-shaped" on faith.
-    // Keyed by FULL query name since r16 (ADVICE r15: prefix keying let
-    // a future q_w10_* silently inherit q_w1's note); stamped as
-    // "floor_note" in per_query_exec. Rows >2x WITHOUT a named note
-    // self-attribute: floor_ratio < 1 auto-stamps the sub-floor-constant
-    // explanation, anything else stamps "floor_note_missing":true so a
-    // bare >2x row is impossible by construction (VERDICT r15 next #3).
-    val TwoMovementNote: String =
-      "two-movement kernel floor (the q_a2 shape): exchange(user_id)+" +
-      "sort feeds an O(1)-state ring kernel (the kernel itself prices " +
-      "at ~4-6% of exec per the q_a2 AND q_w1 decompositions - two " +
-      "same-shape queries measured independently, r16/r17), then the " +
-      "total-order output sort of the FULL row count is the second " +
-      "movement. " +
-      "Sub-second absolute, tier-decaying ratio vs a single-process " +
-      "DuckDB; both movements are irreducible for a total-ordered " +
-      "full-column output."
-    val StringPassNote: String =
-      "near-floor string pass: exec is the bounded documents scan plus " +
-      "one codegen'd byte/string pass riding it (no shuffle beyond the " +
-      "output sort); floor_ratio ~0.6-1.3 = at or below ~1.3 bare scans " +
-      "of total cost against a DuckDB side that is near-instant on " +
-      "small strings - fixed stage latency, not plan fat."
-    val W1OwnNote: String =
-      "two-movement kernel floor with ITS OWN r17 decomposition " +
-      "(runMain graft.Decomp <sf>@x5, noop sink, best-of-3): bare " +
-      "4-column scan 0.095s, +exchange(user_id)+sort 0.245s, +SMA ring " +
-      "kernel 0.275s (the kernel adds ~6% of exec), +projection 0.284s, " +
-      "+output total order 0.545s. The total order is ~48% of exec; " +
-      "measured-and-rejected: (a) localCheckpoint before the orderBy so " +
-      "RangePartitioning's bound-sampling reads blocks instead of " +
-      "re-executing the kernel stage - 0.528s vs 0.565s same-run (~7%), " +
-      "not worth pinning the full output in the storage pool per call; " +
-      "(b) one-task output sort - the q_a2 measurement, anti-pattern at " +
-      "scale for a full-row-count output. Since r17 the kernel input is " +
-      "pre-projected to 4 fixed-width columns (Tables.eventsSeries) so " +
-      "the series exchange carries no string columns. Both movements " +
-      "are irreducible for a total-ordered full-column output; " +
-      "sub-second absolute, tier-decaying ratio. CLOSED r19 (third " +
-      "measurement): the RangePartitioning sample-pass re-execution of " +
-      "the kernel stage was re-adjudicated once more per VERDICT r18 " +
-      "next #2 - same-run Decomp x5/x10: orderBy 1.005/0.993s vs " +
-      "checkpoint-before-orderBy 0.805/1.075s and one-task sort " +
-      "0.893(g2)/1.063s - the alternatives trade ~inside noise at x5 " +
-      "and LOSE at x10, three rounds running; deterministic range " +
-      "bounds cannot be expressed over a DataFrame child without an " +
-      "RDD-level partitioner whose Java-serialized row shuffle forfeits " +
-      "Tungsten. The sample pass is priced into this floor permanently."
-    val E2OwnNote: String =
-      "steady shape is 1.4-1.9 bare-scan floors across five " +
-      "independent samples (r16 x5 1.83 floors, r16 x10 1.47, r17 x10 " +
-      "1.70, r17 driver re-run x5 1.60 with ratio 1.07, r17 driver " +
-      "re-run x10 1.37); the r17 record's x5 0.794s (2.44 floors, " +
-      "ratio 2.31) was a tail sample on an UNCHANGED binary - the same " +
-      "round's driver re-run measured 0.446s on the identical commit. " +
-      "r18 re-registered the strip-first/narrow-exchange shape after " +
-      "a three-way same-run Decomp comparison at x5 AND x50: content " +
-      "strips pre-window (the fingerprint needs it) but text and " +
-      "title_desc never cross the exchange (title re-derives from a " +
-      "30-char head column on the N survivors), and scoring runs " +
-      "post-dedup - less shuffle AND less compute than the r17 wide " +
-      "shape (x50: 1.44/1.64s vs wide 2.24/1.75s), and it beats the " +
-      "pure scalar-first variant which pays stats on the 1.33N " +
-      "pre-dedup rows (1.76/2.19s at x50). Both rejected variants " +
-      "stay in Decomp as e2_wide_exchange_R17/e2_scalar_first_ALT. " +
-      "Remaining cost = bounded scan + one strip pass + ONE " +
-      "one-string exchange + survivor scoring + output total order."
-    val D5OwnNote: String =
-      "exec here is a RESIDUAL, not the query: the connected-components " +
-      "loop runs eager localCheckpoints at DataFrame-construction time " +
-      "and is billed to planning, so spark_exec_sec times only the " +
-      "final label-join + 75-row output sort over already-checkpointed " +
-      "blocks. The r16->r17 exec step 0.044->0.242s (flagged in VERDICT " +
-      "r17 what's-wrong #4) is one-to-two stage-latency quanta of " +
-      "residual, decided by whether the ScratchCache'd signature table " +
-      "and checkpoint blocks were still pool-resident when the timed " +
-      "pass ran - the stable total is spark_fresh_sec, which moved " +
-      "only 1.066->1.211s (+14%, within tier noise). Neither record " +
-      "lied; the honest number for q_d5 is fresh, not exec."
-    val G2OwnNote: String =
-      "since r17 the registered plan is the FULLY FUSED shape " +
-      "(VERDICT r16 next #1): bands AND the lag-1 crossover algebra run " +
-      "in ONE sorted mapPartitions pass (BollingerCrossKernel - the E3 " +
-      "kernel), eliminating the second exchange + sort + WindowExec " +
-      "pair that the post-kernel crossover lags forced over the opaque " +
-      "mapPartitions output. Same-run x5 comparison (runMain " +
-      "graft.Decomp, noop sink, best-of-3): fused 0.540s vs windowed " +
-      "0.667s; parity pinned in DecFrameParitySpec, same oracle. Its " +
-      "own x5 decomposition now matches q_w1_sma's shape bit-for-bit: " +
-      "scan 0.095s, +exchange+sort 0.245s, +fused kernel 0.273s, " +
-      "+output total order 0.540s - the extra ~1.1-floor gap vs q_w1 " +
-      "that r16 flagged is GONE (0.540 vs 0.545 same-run). Remaining " +
-      "cost = the two irreducible total movements of the q_w1/q_a2 " +
-      "family; kernel itself ~6% of exec. r18 closure (VERDICT r17 " +
-      "next #3, the last ~9% at x5): both named output-sort " +
-      "alternatives measured with q_g2's OWN numbers, same-run Decomp " +
-      "best-of-3 x4 reps - (a) one-task repartition(1)+" +
-      "sortWithinPartitions wins ~15-25% at x5 (0.67-0.82s vs " +
-      "0.82-1.11s) but LOSES at x10 (0.97-1.15s vs 0.89-1.04s): a " +
-      "single-task sort of the FULL row count inverts with scale " +
-      "exactly as the q_a2 adjudication predicted, rejected - q_e3's " +
-      "precedent does not transfer because q_e3 sorts a tiny filtered " +
-      "signal set while q_g2 outputs every input row; (b) " +
-      "localCheckpoint-before-orderBy is a no-win here as for q_w1 " +
-      "(0.85-0.92s vs 0.82-0.91s same-run). The x5 letter-gap is " +
-      "therefore priced and closed: two irreducible total movements, " +
-      "range-sort kept for scale."
-    val floorNotes: Map[String, String] = Map(
-      "q_w1_sma" -> W1OwnNote,
-      "q_g2_bbands_signal" -> G2OwnNote,
-      "q_e2_news_pipeline" -> E2OwnNote,
-      "q_d5_dup_clusters" -> D5OwnNote,
-      "q_e3_signal_overlay" -> ("the r15 'residual' was the orderBy " +
-        "itself: RangePartitioning's bound-sampling pass re-executed " +
-        "the whole post-shuffle stage (agg+kernel+filter) once more " +
-        "just to sample a few hundred signal rows. Since r16 the total " +
-        "order is repartition(1)+sortWithinPartitions over the tiny " +
-        "filtered signal set (NOT the q_a2 anti-pattern - there the " +
-        "output is every input row). Measured at x5 (noop sink, " +
-        "best-of-3): orderBy 0.883s vs one-task sort 0.495s. Fresh x5 " +
-        "decomposition: bounded scan 0.102s, +repartition(user_id) " +
-        "0.150s, +bar agg 0.082s, +fused Bollinger+crossover kernel " +
-        "0.172s, +signal filter/projection 0.035s, +one-task sort of " +
-        "the tiny result ~0.05s. Plan: PushedFilter bounded scan -> " +
-        "ONE 4-column data exchange -> fused agg+kernel (no Window " +
-        "operator) -> single-task result sort. Still standing from " +
-        "r15: map-side partial bar agg rejected (bars~=rows on this " +
-        "corpus, doubles shuffled bytes); AQE-off rejected " +
-        "(session-wide conf mutation in a library query). At " +
-        "production scale the serving answer is the X2 incremental " +
-        "tick (maintained bars), not a faster cold recompute."),
-      "q_a2_median_fill" -> ("the 5-row median kernel is NOT the cost: x5 " +
-        "decomposition shows exchange+sort(user_id,ts) 0.458s, +median " +
-        "ring kernel 0.019s (4% of exec), +final total-order " +
-        "sort(event_id) of all 500k output rows 0.39s. " +
-        "Measured-and-rejected: (a) lag(0..4)+median-of-5 window " +
-        "expression (the sort-5 codegen route) - 1.081s vs 0.896s, " +
-        "WindowExec+per-row array loses to the ring kernel; (b) " +
-        "repartition(1)+sortWithinPartitions for the output order - " +
-        "0.864s vs 0.965s, ~10% once, but a single-task global sort is " +
-        "an anti-pattern at scale, rejected. Cost = two irreducible " +
-        "total data movements (frame partitioning + output total " +
-        "order) that DuckDB also executes but with single-process " +
-        "constants; ratio decays with tier (x10 1.38x)."),
-      "q_j3_range_count" -> ("since r16 the registered plan is the FUSED " +
-        "one-source shape (VERDICT r15 next #1): one bounded scan of " +
-        "both event types -> ONE exchange(user_id)+sort(ts_us) -> " +
-        "native range-frame window count -> output total order. x5 " +
-        "decomposition (noop sink, best-of-3): scan 0.244s, " +
-        "+exchange+sort 0.254s, +window compute 0.067s, +output total " +
-        "order 0.194s - movement-bound, the window aggregate itself is " +
-        "~9% of exec, so a ring kernel was measured-and-rejected as " +
-        "no-win. Same-run comparison vs the general two-scan interval " +
-        "join (kept as q_j3b): 0.660s vs 0.899s exec - the fusion " +
-        "halves the data movements as priced. Remaining cost = scan + " +
-        "two irreducible total movements that DuckDB executes with " +
-        "single-process constants; sub-second absolute."),
-      "q_j3b_range_join_general" -> ("the GENERAL bounded-fan-out " +
-        "interval join (scan x2 -> bucketed pair shuffle -> re-agg " +
-        "exchange -> total-order), kept registered because it is the " +
-        "operator a user reaches for when the two sides are DIFFERENT " +
-        "tables and no window fusion applies. For the one-source " +
-        "trailing-count semantics the fused q_j3_range_count shape is " +
-        "the serving answer (0.660s vs 0.899s exec, same run); this " +
-        "entry prices the generality tax. floor_ratio ~1.9, sub-second " +
-        "absolute, tier-decaying."),
-      "q_j1b_star_join" -> ("near-floor read path (floor_ratio ~1.0 at " +
-        "x5, ~1.3 at x10): the fact side never shuffles - exec is the " +
-        "bare fact scan + the broadcast (o_orderkey -> r_name) " +
-        "LongDomainMap lookup projection + a 5-group hash agg riding " +
-        "the scan. The >2x ratio is Spark's fixed per-job cost against " +
-        "a single-process DuckDB join on a small dim-joined output, " +
-        "not plan fat; the residual over the bare scan is the lookup " +
-        "projection itself."),
-      "q_j2_asof_join" -> ("one-source fused asof: ONE pushed-filter " +
-        "scan discriminating both sides + the window exchange + the " +
-        "output total order — no join operator at all (AsofJoinSpec " +
-        "pins the 1-scan/1-exchange plan). Quiet floor_ratio ~1.3; a " +
-        ">2x sample at a tier is stage-latency spread under residual " +
-        "load, not plan fat (the steal-0 x10 tier sits near 2x with " +
-        "the same sub-1.5 floor_ratio)."),
-      "q_t1_html_strip" -> StringPassNote,
-      "q_t1b_html_parser_strip" -> StringPassNote,
-      "q_t10_pii_redact" -> StringPassNote) ++
-      // the whole two-movement ring-kernel family shares q_a2's shape
-      // and therefore its attribution — stamped per name so every >2x
-      // sample in any tier self-explains (VERDICT r15 next #3)
-      Seq("q_w2_gaussian", "q_w3_savgol", "q_w5_lag",
-        "q_w6_bbands", "q_w7_rank_suite", "q_g1_rsi_signal",
-        "q_g3_macd_signal", "q_g4_ppo_signal",
-        "q_g5_adx_signal").map(_ -> TwoMovementNote)
-    // One scaled-replica comparison at `mult` over `names`: DuckDB times
-    // the oracle SQLs on the replica, Spark measures fresh-lineage
-    // execution (separately-timed planning subtracted). Returns the
-    // scaled DuckDB seconds so the caller can pick the next tier's
-    // subset from MEASURED times.
-    def scaledProofAt(mult: Int, label: String, names: Seq[String],
-        subsetLabel: String,
-        rel: Map[String, String], writeJson: Map[String, String] => java.nio.file.Path,
-        runDuck: (String, java.nio.file.Path) => Option[Map[String, Double]])
-        : Map[String, Double] = try {
-      if (names.isEmpty) return Map.empty
-      val scaledDir = graft.sources.ScaledTables.ensure(spark, sfDir, mult)
-      val subRel = rel.view.filterKeys(names.contains).toMap
-      val duckScaled = runDuck(scaledDir, writeJson(subRel)).getOrElse(Map.empty)
-      // the DuckDB sweep just saturated every core; without a gate the
-      // first Spark timings of the tier absorb its loadavg tail (r12:
-      // q_j1b stamped 0.51 s exec in the record vs 0.25 s quiet — the
-      // whole apparent >2x on the named read-path queries was this)
-      waitQuiet()
-      val cpu0 = cpuStat()
-      // a duck value <= 0 means the oracle errored or hit the
-      // per-query budget: keep the query in the block with
-      // duck_timed_out:true and its MEASURED spark seconds (VERDICT
-      // r11 next #4 — q_d5's x10 ratio printed a bare 0.0 when
-      // DuckDB's recursive-CTE CC approached the budget; raw seconds
-      // per side make every ratio auditable and a floored one visible)
-      case class ScaledQ(name: String, planSec: Double, callSec: Double,
-        duckSec: Double, timedOut: Boolean, budgetCut: Boolean) {
-        def execSec: Double = math.max(callSec - planSec, 1e-4)
-        def execRatio: Double = execSec / duckSec
-        def freshRatio: Double = callSec / duckSec
-      }
-      val pairs = names.sorted.flatMap { n =>
-        val d = duckScaled.getOrElse(n, -1.0)
-        SparkEntry.freshQueries.get(n).flatMap { fn =>
-          try {
-            fn(spark, scaledDir).collect() // warm tables/codegen for this dir
-            val planT = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, scaledDir).queryExecution.executedPlan
-              (System.nanoTime() - t0) / 1e9
-            }.min
-            val callT = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, scaledDir).collect()
-              (System.nanoTime() - t0) / 1e9
-            }.min
-            // -2.0 = the tool's cumulative sweep budget ran out before
-            // this oracle was attempted (ADVICE r13 #4) — not a slow
-            // oracle; stamped distinctly so the artifact reader can tell
-            Some(ScaledQ(n, planT, callT, d,
-              timedOut = d <= 0 && d != -2.0, budgetCut = d == -2.0))
-          } catch { case _: Throwable => None }
-        }
-      }
-      def med(rs: Seq[Double]): Double = {
-        val s = rs.sorted; if (s.isEmpty) -1.0 else s(s.size / 2)
-      }
-      val compared = pairs.filter(q => !q.timedOut && !q.budgetCut)
-      val execMed = med(compared.map(_.execRatio))
-      val freshMed = med(compared.map(_.freshRatio))
-      // the tier's per-job floor (VERDICT r12 next #3): q_s4 is a bare
-      // bounded parquet range scan — the cheapest possible Spark job at
-      // this replica size — so exec ÷ q_s4-exec attributes a sub-second
-      // query's >2x-vs-DuckDB ratio to Spark's fixed per-job cost
-      // rather than plan fat, FROM THE ARTIFACT: floor-bound entries
-      // (q_j1b/q_j2/q_t1/q_e3) self-identify at floor_ratio <= ~2,
-      // while a genuinely fat plan stands out at >2x duck AND >3x floor.
-      val floorExec = pairs.find(_.name.startsWith("q_s4")).map(_.execSec)
-      // per-query raw seconds + ratio named in the artifact (VERDICT
-      // r10 next #5 / r11 next #4): spark exec + fresh-call seconds,
-      // duck seconds, the ratio, and an explicit timeout flag — no
-      // bare ratios whose provenance can't be audited
-      val perQ = pairs.map { q =>
-        val over2 = !q.budgetCut && !q.timedOut && q.duckSec > 0 &&
-          q.execRatio > 2.0
-        val floorR = floorExec.map(q.execSec / _)
-        // structural-floor stamp (VERDICT r16 next #2): duck_floor_ratio
-        // = bare-scan floor ÷ DuckDB seconds. When 2 x duck_sec is BELOW
-        // the floor, a zero-work Spark query over the same bounded scan
-        // would already exceed 2x DuckDB — the per-query 2x bar is
-        // unreachable BY CONSTRUCTION and the row is auto-classified
-        // structurally_floored, making the q_j3/q_e3-class adjudication
-        // mechanical instead of judge-side arithmetic.
-        val duckFloorR = floorExec.flatMap(fl =>
-          if (q.duckSec > 0 && !q.timedOut && !q.budgetCut)
-            Some(fl / q.duckSec) else None)
-        val structFloored = duckFloorR.exists(_ > 2.0)
-        // near-floor band (VERDICT r17 next #4, the moving-denominator
-        // rule): 1.5 < duck_floor_ratio <= 2.0 means the 2x bar sits
-        // within 1.33x of the bare-scan floor — one stage-latency
-        // spread over a sub-second denominator covers the gap, and the
-        // DuckDB side speeding up round-over-round should not re-open
-        // an adjudicated row (q_a2 re-crossed 2x in r17 purely on duck
-        // 0.375->0.245 s with Spark exec flat).
-        val nearFloor = !structFloored && duckFloorR.exists(_ > 1.5)
-        // exact-name note, else the sub-floor / near-floor
-        // auto-attribution; a >2x row with none of these stamps
-        // floor_note_missing AND classification plan_fat — which since
-        // r18 FAILS the record gate (see gateOffenders) so it can't be
-        // bare in a committed record
-        val note = floorNotes.get(q.name).orElse {
-          if (!over2) None
-          else floorR.collect {
-            case r if r < 1.0 =>
-              f"sub-floor constant: exec ${q.execSec}%.3fs is BELOW " +
-                f"the tier's bare-scan floor (q_s4_range_scan " +
-                f"${floorExec.get}%.3fs, floor_ratio $r%.2f) - the " +
-                ">2x ratio is fixed per-job stage latency against a " +
-                "near-instant DuckDB side on this corpus, not plan fat."
-          }.orElse {
-            if (nearFloor) duckFloorR.map(dfr =>
-              f"near-floor: the 2x bar (${2 * q.duckSec}%.3fs) sits " +
-                f"within 1.33x of the tier's bare-scan floor " +
-                f"(${floorExec.get}%.3fs, duck_floor_ratio $dfr%.2f) - " +
-                "the gap is one stage-latency spread over a sub-second " +
-                "DuckDB denominator, classified near_floor by the r18 " +
-                "weak-rule, not plan fat.")
-            else None
-          }
-        }
-        val classification =
-          if (!over2) None
-          else if (structFloored) Some("structurally_floored")
-          else if (nearFloor) Some("near_floor")
-          else if (floorR.exists(_ < 1.0)) Some("sub_floor_constant")
-          else if (floorNotes.contains(q.name)) Some("attributed")
-          else Some("plan_fat")
-        val base = s"${jstr(q.name)}:{" +
-          f""""spark_exec_sec":${q.execSec}%.3f,""" +
-          f""""spark_fresh_sec":${q.callSec}%.3f,""" +
-          floorR.map(r => f""""floor_ratio":$r%.2f,""").getOrElse("") +
-          duckFloorR.map(r => f""""duck_floor_ratio":$r%.2f,""").getOrElse("") +
-          (if (structFloored) s""""structurally_floored":true,""" else "") +
-          classification.map(c => s""""classification":${jstr(c)},""").getOrElse("") +
-          note.map(t => s""""floor_note":${jstr(t)},""").getOrElse("") +
-          (if (over2 && note.isEmpty && !structFloored)
-             s""""floor_note_missing":true,"""
-           else "")
-        if (q.budgetCut) base + s""""duck_budget_cut":true}"""
-        else if (q.timedOut) base + s""""duck_timed_out":true}"""
-        else base + f""""duck_sec":${q.duckSec}%.3f,"ratio":${q.execRatio}%.3f}"""
-      }.mkString("{", ",", "}")
-      scaledBlocks = scaledBlocks :+ (
-        s""""$label":{"scale_mult":$mult,"base_sf":${jstr(sfDir)},""" +
-        s""""weak_rule":${jstr("a >2x row is plan_fat ONLY if " +
-          "duck_floor_ratio (bare-scan floor / duck_sec) <= 1.5 and it " +
-          "carries no named floor_note; >2.0 = structurally_floored " +
-          "(2x bar below the bare-scan floor, unreachable by " +
-          "construction); 1.5-2.0 = near_floor (bar within 1.33x of " +
-          "the floor, one stage-latency spread); floor_ratio < 1 = " +
-          "sub_floor_constant. Keyed to duck_floor_ratio so the " +
-          "oracle-side denominator speeding up round-over-round " +
-          "cannot re-open an adjudicated row (r18, VERDICT r17 " +
-          "next #4).")},""" +
-        f""""steal_pct":${stealPct(cpu0, cpuStat())}%.2f,""" +
-        s""""n_compared":${compared.size},""" +
-        s""""n_duck_timed_out":${pairs.count(_.timedOut)},""" +
-        s""""n_duck_budget_cut":${pairs.count(_.budgetCut)},""" +
-        s""""subset":${jstr(subsetLabel)},""" +
-        floorExec.map(fl =>
-          s""""floor_name":"q_s4_range_scan",""" +
-          f""""floor_exec_sec":$fl%.3f,""").getOrElse("") +
-        f""""median_ratio_exec_heavy":$execMed%.3f,""" +
-        f""""median_ratio_fresh_heavy":$freshMed%.3f,""" +
-        s""""per_query_exec":$perQ}""")
-      duckScaled
-    } catch {
-      case e: Throwable =>
-        errors("__" + label) =
-          Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        Map.empty
-    }
-    // ---- scaled-replica tiers, each its own phase. Per-query DuckDB
-    // budget 120 s (ADVICE r10 #3: the 30 s default is sized for sf0.1 —
-    // at x5/x10 a legitimate heavy query times out and silently drops
-    // from the comparison), cumulative sweep budgets bounding the
-    // contended worst case (VERDICT r12 next #1).
-    if (relScaled.nonEmpty) {
-      val scaleMult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "5").toInt
-      val pins = scaledPins.filter(relScaled.contains)
-      val heavyNames =
-        (duckSecBase.toSeq.filter(_._2 >= 0.05).map(_._1) ++ pins).distinct.sorted
-      // membership diff vs the previous on-disk record ("no silent
-      // caps", VERDICT r16 next #3): every entered/dropped query is in
-      // the artifact with the cut reason, so a regression in a cut
-      // query can't go unrecorded without a visible trace.
-      if (prevScaledSubset.nonEmpty) {
-        val entered = heavyNames.filterNot(prevScaledSubset.contains)
-        val dropped = (prevScaledSubset -- heavyNames.toSet).toSeq.sorted
-        val droppedJ = dropped.map { n =>
-          val why = duckSecBase.get(n) match {
-            case Some(d) if d < 0.05 =>
-              f"base_duck_sec $d%.3f below the 0.05s heavy cut this run"
-            case Some(d) =>
-              f"base_duck_sec $d%.3f but excluded (not in scaled oracle set)"
-            case None => "no base oracle measurement this run"
-          }
-          s"""{"name":${jstr(n)},"reason":${jstr(why)}}"""
-        }.mkString("[", ",", "]")
-        scaledBlocks = scaledBlocks :+ (
-          s""""scaled_subset_membership":{""" +
-          s""""prev_record_n":${prevScaledSubset.size},""" +
-          s""""current_n":${heavyNames.size},""" +
-          s""""subset_entered":${entered.map(jstr).mkString("[", ",", "]")},""" +
-          s""""subset_dropped":$droppedJ}""")
-      }
-      if (runBlock("duckdb_scaled") && !shouldShed("duckdb_scaled")) {
-        scaledProofAt(scaleMult, "duckdb_scaled", heavyNames,
-          "full_heavy_set_plus_dedup", relScaled, writeOracleJson,
-          (d, o) => runDuckTimer(d, o, perQueryBudgetSec = 120,
-            totalBudgetSec = 600))
-        phaseDone("duckdb_scaled")
-      }
-      if (scaleMult != 10 && x10Enabled && runBlock("duckdb_scaled_x10") &&
-          !shouldShed("duckdb_scaled_x10")) {
-        // x10 over the FULL heavy set (VERDICT r11 next #8) — now
-        // opt-in via SPARK_GRAFT_X10 (VERDICT r12 next #1b): on the r12
-        // driver's contended box all 22 of its oracles individually hit
-        // the 120 s budget and blew the round's wall budget. The
-        // archived bench_scaled_x10_full_heavy.json (regenerated at
-        // HEAD each round) is the x10 artifact of record.
-        scaledProofAt(10, "duckdb_scaled_x10", heavyNames,
-          "full_heavy_set_plus_dedup", relScaled, writeOracleJson,
-          (d, o) => runDuckTimer(d, o, perQueryBudgetSec = 120,
-            totalBudgetSec = 1200))
-        phaseDone("duckdb_scaled_x10")
-      }
-    }
-    // sf1 full-surface sweep (VERDICT r15 next #8): the ENTIRE oracled
-    // query surface re-gated at the x10 key-shifted replica ("sf1"),
-    // wired as a budgeted phase on the duckdb_scaled_x10 precedent.
-    // DEFAULT-ON since r17 (VERDICT r16 next #5): check_oracle.py now
-    // memoizes DuckDB results per (corpus fingerprint, SQL) — the
-    // oracle side that cost ~20 min cold (q_n9's recursive packing CTE
-    // was the hog) reruns from cache in seconds, so only the Spark dump
-    // remains. Opt-OUT with SPARK_GRAFT_SF1SWEEP=0; shed only on
-    // genuine wall-budget pressure (shouldShed), stamped either way.
-    // The subprocess is hard-bounded (ADVICE r16 #5): output drains on
-    // a daemon thread, waitFor carries a timeout sized from the
-    // remaining wall budget, and expiry destroys the process forcibly
-    // and stamps timed_out instead of hanging the round.
-    sf1Sweep = if (!runBlock("sf1_sweep")) None
-    else if (sys.env.get("SPARK_GRAFT_SF1SWEEP").map(_.trim.toLowerCase)
-        .exists(v => Set("0", "false", "no", "off").contains(v)))
-      Some(""""sf1_sweep":{"skipped":"disabled via SPARK_GRAFT_SF1SWEEP=0; artifact of record: the previous round's committed sweep"}""")
-    else if (shouldShed("sf1_sweep")) None
-    else try {
-      val t0 = System.nanoTime()
-      val checkScript = java.nio.file.Paths.get("tools/check_oracle.py")
-      if (!java.nio.file.Files.exists(checkScript))
-        throw new IllegalStateException(
-          s"check_oracle.py not found at ${checkScript.toAbsolutePath}")
-      val scaledDir = graft.sources.ScaledTables.ensure(spark, sfDir, 10)
-      val outDir =
-        java.nio.file.Files.createTempDirectory("graft_sf1sweep").toString
-      val nQueries = Verify.dump(spark, scaledDir, outDir)
-      val pb = new ProcessBuilder(
-        "python3", "tools/check_oracle.py", scaledDir, outDir)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val outBuf = new scala.collection.mutable.ArrayBuffer[String]()
-      val reader = new Thread(() => {
-        val src = scala.io.Source.fromInputStream(proc.getInputStream)
-        try src.getLines().foreach(l => outBuf.synchronized(outBuf += l))
-        finally src.close()
-      }, "sf1-sweep-oracle-drain")
-      reader.setDaemon(true)
-      reader.start()
-      val budgetSec = math.min(1800L,
-        math.max(120L, (wallDeadlineSec - elapsedSec).toLong))
-      val finished =
-        proc.waitFor(budgetSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (!finished) {
-        proc.destroyForcibly()
-        Some(s""""sf1_sweep":{"scaled_dir":${jstr(scaledDir)},""" +
-          s""""n_queries":$nQueries,"timed_out":true,""" +
-          s""""oracle_budget_sec":$budgetSec,""" +
-          f""""wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      } else {
-        val rc = proc.exitValue()
-        reader.join(5000)
-        val outLines = outBuf.synchronized(outBuf.toList)
-        val tailLine = outLines.reverse
-          .find(_.contains("oracled queries")).getOrElse("")
-        val m = """(\d+) ok, (\d+) failed of (\d+)""".r
-          .findFirstMatchIn(tailLine)
-        val failNames = outLines.filter(_.startsWith("FAIL"))
-          .take(10).map(l => jstr(l.take(120)))
-        Some(s""""sf1_sweep":{"scaled_dir":${jstr(scaledDir)},""" +
-          s""""n_queries":$nQueries,"check_rc":$rc,""" +
-          m.map(mm => s""""n_ok":${mm.group(1)},"n_failed":${mm.group(2)},"n_oracled":${mm.group(3)},""").getOrElse("") +
-          s""""fails":[${failNames.mkString(",")}],""" +
-          f""""wall_sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
-      }
-    } catch {
-      case e: Throwable =>
-        errors("__sf1_sweep") =
-          Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-    }
-    phaseDone("sf1_sweep")
-    val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val timed = results.filter(_._2 >= 0)
-    // the MemoryStream-harness queries are correctness gates, not
-    // operator cost — keep them out of the headline wall-time
-    val batchTimed = timed.filterNot(r => streamingNames(r._1))
-    val total = batchTimed.map(_._2).sum
-    val streamingSec = timed.filter(r => streamingNames(r._1)).map(_._2).sum
-    // Headline subset (QueryDef.bench = true): the heavy, scale-relevant ops.
-    val headlineNames = SparkEntry.benchQueries.toSet
-    val headline = batchTimed.filter(r => headlineNames(r._1)).map(_._2).sum
-    // after the sweeps, release every registered persisted intermediate
-    // (VERDICT r5 what's-wrong #2: fresh builds used to stack cached
-    // copies in the storage pool for the rest of the process)
+    val p = new BenchPhases(spark, sfDir, host, record, loop, recordFile)
+    loop.run(Seq(
+      Phase("throughput", 240, sheddable = false, p.throughput),
+      Phase("sweep", 300, sheddable = false, p.sweep),
+      Phase("duckdb", 420, sheddable = false, p.duckdb),
+      Phase("ann_recall", 90, sheddable = true, p.annRecall),
+      Phase("ivf_index", 150, sheddable = true, p.ivfIndex),
+      Phase("dedup_scaled", 90, sheddable = true, p.dedupScaled),
+      Phase("ann_scaled", 300, sheddable = true, p.annScaled),
+      Phase("nsw_scaled", 200, sheddable = true, p.nswScaled),
+      Phase("streaming_tp", 120, sheddable = true, p.streamingTp),
+      Phase("duckdb_scaled", 360, sheddable = true, () => p.scaledTier(5, 600))) ++
+      Option.when(x10)(Phase("duckdb_scaled_x10", 900, sheddable = true,
+        () => p.scaledTier(10, 1200))) :+
+      (if (sf1) Phase("sf1_sweep", 700, sheddable = true, p.sf1Sweep)
+       else Phase("sf1_sweep", 700, sheddable = false, () => Some(J.obj("skipped" ->
+         ("disabled via SPARK_GRAFT_SF1SWEEP=0; artifact of record: the " +
+          "previous round's committed sweep"))))))
+
     ScratchCache.drain(spark)
-    val extras = Seq(throughput, recall, ivf, dedupScaled, annScaled,
-      nswScaled, streamTp, sf1Sweep, duck).flatten ++ scaledBlocks
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","headline":$headline,""" +
-      f""""streaming_harness_sec":$streamingSec%.3f,""" +
-      s""""n_queries":${results.size},"n_failed":${errors.size},""" +
-      s""""deadline_s":$wallDeadlineSec,""" +
-      s""""shed_phases":[${shedPhases.map(jstr).mkString(",")}],""" +
-      extras.map(_ + ",").mkString +
-      s""""queries":$qs,"errors":$errJson,"sf":${jstr(sfDir)}}""")
-    // re-emit each metrics block as its own compact tail line (survives
-    // tail-truncated captures — the round-2 throughput block was lost)
-    extras.foreach(e => println(s"""{"metric":"extras",$e,"sf":${jstr(sfDir)}}"""))
-    // FINAL line: a compact summary < ~1200 chars carrying every headline
-    // number. The driver keeps only the LAST ~2000 chars of stdout, and in
-    // round 3 the bulky per-query duckdb extras line pushed the main line,
-    // throughput, AND ann_recall out of the capture — whatever must reach
-    // the judge has to fit in the tail, so it is re-stated here last.
-    val slowest = batchTimed.sortBy(-_._2).take(5)
-      .map { case (k, v) => s"${jstr(k)}:${f"$v%.2f"}" }.mkString("{", ",", "}")
-    val throughputC = throughput.map(t => t.stripPrefix("\"throughput\":"))
-      .getOrElse("null")
-    val recallC = recall.map(_.stripPrefix("\"ann_recall\":")).getOrElse("null")
-    val ivfC = ivf.map(_.stripPrefix("\"ivf_index\":")).getOrElse("null")
-    val duckC = duck.map { d =>
-      // keep only the scalar fields of the duckdb block
-      val keep = Seq("n_compared", "median_ratio", "n_heavy",
-        "median_ratio_heavy", "median_ratio_exec_heavy",
-        "median_ratio_cached_heavy", "median_ratio_cached")
-      val pat = ("\"(" + keep.mkString("|") + ")\":\\s*(-?[0-9.eE+]+)").r
-      pat.findAllMatchIn(d).map(m => s""""${m.group(1)}":${m.group(2)}""")
-        .mkString("{", ",", "}")
-    }.getOrElse("null")
-    val dedupC = dedupScaled.map(_.stripPrefix("\"dedup_scaled\":")).getOrElse("null")
-    val annC = annScaled.map(_.stripPrefix("\"ann_scaled\":")).getOrElse("null")
-    val nswScaledC = nswScaled.map(_.stripPrefix("\"nsw_scaled\":")).getOrElse("null")
-    val streamC = streamTp.map(_.stripPrefix("\"streaming_tp\":")).getOrElse("null")
-    val sf1C = sf1Sweep.map(_.stripPrefix("\"sf1_sweep\":")).getOrElse("null")
-    val scaledC = scaledBlocks.find(_.startsWith("\"duckdb_scaled\":"))
-      .map(_.stripPrefix("\"duckdb_scaled\":")).getOrElse("null")
-    val scaledX10C = scaledBlocks.find(_.startsWith("\"duckdb_scaled_x10\":"))
-      .map(_.stripPrefix("\"duckdb_scaled_x10\":")).getOrElse("null")
-    // the membership diff must survive into the FINAL file write — the
-    // summary assembly cherry-picks scaledBlocks by name, which is how
-    // the r17 block reached the per-phase extras line but not the record
-    val membershipC = scaledBlocks
-      .find(_.startsWith("\"scaled_subset_membership\":"))
-      .map(_.stripPrefix("\"scaled_subset_membership\":")).getOrElse("null")
-    // record gate (VERDICT r17 next #2): a bare >2x row — stamped
-    // floor_note_missing by the tier classifier — fails a record run.
-    val waiveSet = sys.env.getOrElse("SPARK_GRAFT_WAIVE", "")
+    println(record.totalLine)
+    record.extrasLines.foreach(println)
+    // deliberately not last: the 2000-character tail must end with the
+    // compact summary
+    println(record.sweepLine)
+    val waived = sys.env.getOrElse("SPARK_GRAFT_WAIVE", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val offenders = gateOffenders(scaledBlocks, waiveSet)
-    val gateC =
-      s"""{"offenders":[${offenders.map(jstr).mkString(",")}],""" +
-      s""""waived":[${waiveSet.toSeq.sorted.map(jstr).mkString(",")}],""" +
-      s""""enforced":$isRecordRun}"""
-    // full per-query map as its own line (r19, VERDICT r18 next #6):
-    // every name→sec pair, so a capture that keeps more than the tail
-    // (or the judge reading the committed artifact) can diff all 140
-    // queries instead of the slowest few. Deliberately NOT the last
-    // line — the driver's 2000-char stdout tail must end with the
-    // compact summary.
-    println(s"""{"metric":"sweep_queries","queries":$qs,"sf":${jstr(sfDir)}}""")
-    val summaryLine =
-      s"""{"metric":"summary","value":$total,"unit":"sec","headline":$headline,""" +
-      f""""streaming_harness_sec":$streamingSec%.3f,""" +
-      s""""quiet_wait_sec":${quietSpentMs.get() / 1000},""" +
-      s""""quiet_budget_s":$quietBudgetSec,"x10_enabled":$x10Enabled,""" +
-      f""""wall_sec":${(System.nanoTime() - runT0) / 1e9}%.1f,""" +
-      s""""deadline_s":$wallDeadlineSec,""" +
-      s""""shed_phases":[${shedPhases.map(jstr).mkString(",")}],""" +
-      s""""n_queries":${results.size},"n_failed":${errors.size},""" +
-      s""""failed":[${errors.keys.map(jstr).mkString(",")}],""" +
-      s""""slowest":$slowest,"throughput":$throughputC,""" +
-      s""""ann_recall":$recallC,"ivf_index":$ivfC,"duckdb":$duckC,""" +
-      s""""dedup_scaled":$dedupC,"ann_scaled":$annC,""" +
-      s""""nsw_scaled":$nswScaledC,""" +
-      s""""streaming_tp":$streamC,"sf1_sweep":$sf1C,""" +
-      s""""duckdb_scaled":$scaledC,"duckdb_scaled_x10":$scaledX10C,""" +
-      s""""scaled_subset_membership":$membershipC,""" +
-      s""""record_gate":$gateC,""" +
-      s""""queries":$qs,""" +
-      s""""sf":${jstr(sfDir)}}"""
-    println(summaryLine)
-    // FINAL-final line (r10 — VERDICT r9 next #2, parsed:null four rounds
-    // running): the summary line above grew past the driver's ~2000-char
-    // stdout tail, so it arrived FRONT-truncated and unparseable. The
-    // last line must therefore be a COMPACT (<1.5 kB) scalar-only
-    // restatement — [[buildCompact]], the same builder the per-phase
-    // partial emission uses; the full summary goes to a file next to the
-    // repo so the judge still gets every number.
-    // the file variant carries the error MESSAGES too — the r9 driver
-    // run had 3 failed blocks and only the key names survived into any
-    // artifact, leaving nothing to diagnose
-    val summaryWithErrors =
-      summaryLine.stripSuffix("}") + s""","errors":$errJson}"""
+    val offenders = gateOffenders(record.scaledFragments, waived)
+    val gate = J.obj("offenders" -> J.strs(offenders),
+      "waived" -> J.strs(waived.toSeq.sorted), "enforced" -> isRecordRun)
+    println(record.summaryLine(gate, withErrors = false))
+    // the file variant carries the error messages too
+    val summaryFile = record.summaryLine(gate, withErrors = true)
     if (isRecordRun && offenders.nonEmpty) {
-      // REFUSE the record: the full summary survives in the
-      // _gated_partial variant, the record file is untouched, and the
-      // run exits nonzero so the invoking shell sees the refusal.
-      val gatedFile = recordFile.stripSuffix(".json") + "_gated_partial.json"
-      writeArtifact(summaryWithErrors, gatedFile)
-      val refusal =
-        s"""{"metric":"record_gate_refusal","offenders":[""" +
-        offenders.map(jstr).mkString(",") +
-        s"""],"kept":${jstr(gatedFile)},"record_not_written":${jstr(recordFile)}}"""
+      val gatedFile = variant("_gated_partial.json")
+      writeArtifact(summaryFile, gatedFile, println(_))
+      val refusal = J.obj("metric" -> "record_gate_refusal",
+        "offenders" -> J.strs(offenders), "kept" -> gatedFile,
+        "record_not_written" -> recordFile).render
       println(refusal)
-      finalCompact = Some(refusal)
+      finalLine = Some(refusal)
       spark.stop()
       sys.exit(1)
     }
-    writeArtifact(summaryWithErrors, fullFile)
+    val written = writeArtifact(summaryFile, fullFile, println(_))
     // a completed record supersedes its own progress artifact
-    if (isRecordRun && progressFile != fullFile)
-      try java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(progressFile))
+    if (written && isRecordRun && progressFile != fullFile)
+      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(progressFile))
       catch { case _: Throwable => () }
-    val compactLine = buildCompact(partial = false)
-    // the early shutdown hook re-prints this after sbt's trailer
-    // (VERDICT r8 next #6 kept — un-forked runs would otherwise lose the
-    // final-line position the driver parses)
-    finalCompact = Some(compactLine)
+    val compactLine = record.compact(partial = false)
+    finalLine = Some(compactLine)
     println(compactLine)
     spark.stop()
+    if (!written && isRecordRun) sys.exit(1)
+  }
+}
+
+/** The bench phase bodies. Each returns its block's fields; state that a
+  * later phase consumes (the DuckDB base times) lives here. */
+private final class BenchPhases(spark: SparkSession, sfDir: String,
+    host: Host, record: BenchRecord, loop: PhaseLoop, recordFile: String) {
+  private def tmpPath(prefix: String): String =
+    System.getProperty("java.io.tmpdir") + "/" + prefix +
+      sfDir.replaceAll("[^A-Za-z0-9]", "_")
+  private lazy val fs =
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  private def rm(path: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private def cores = Runtime.getRuntime.availableProcessors()
+
+  /** Steady-state throughput probes against BASELINE.md's targets (frame
+    * kernels >= 1M rows/s/core, scoring >= 10k docs/s, kNN over 1e5 x
+    * 768-d < 1 s) plus the persisted NSW index story. They run first,
+    * on a quiet JVM: after the sweep, GC and heap pressure degraded the
+    * same probes 2-5x. */
+  def throughput(): Option[J.Obj] = {
+    spark.catalog.clearCache()
+    System.gc()
+    // best-of-5 cannot save the headline when all five reps are
+    // contended, so the probe phase itself is quiet-gated
+    host.waitQuiet()
+    val load0 = Host.loadAvg()
+    val cpu0 = Host.cpuStat()
+    // frame-kernel probe: SMA30 + Bollinger(20,2) over 20M synthetic
+    // rows across 1000 series — one shuffle, windowed aggregates in
+    // whole-stage codegen
+    val frameRows = 20000000L
+    val sdf = spark.range(frameRows)
+      .select((col("id") % 1000).as("user_id"), col("id").as("ts"),
+        sin(col("id").cast("double") * 1e-3).as("value"))
+    val w = Window.partitionBy("user_id").orderBy("ts")
+    val f20 = w.rowsBetween(-19, 0)
+    val frameSpread = spreadOf {
+      sdf.select(
+        avg(col("value")).over(w.rowsBetween(-29, 0)).as("sma"),
+        (avg(col("value")).over(f20) + lit(2.0) * stddev_pop(col("value")).over(f20)).as("up"))
+        .filter(col("sma").isNotNull && col("up").isNotNull)
+        .count()
+    }
+    val frameSec = frameSpread.head
+    // narrow-kernel probe: the same trailing-window arithmetic as a fused
+    // mapPartitions over already-partitioned data — kernel throughput
+    // without the one-off exchange the shuffled probe includes
+    import spark.implicits._
+    val narrowSpread = spreadOf {
+      spark.range(frameRows)
+        .select(sin(col("id").cast("double") * 1e-3).as("value"))
+        .as[Double]
+        .mapPartitions { it =>
+          val ring = new Array[Double](30)
+          var n = 0L
+          var sum = 0.0
+          var kept = 0L
+          while (it.hasNext) {
+            val v = it.next()
+            val slot = (n % 30).toInt
+            if (n >= 30) sum -= ring(slot)
+            ring(slot) = v
+            sum += v
+            n += 1
+            if (n >= 30 && sum / 30.0 < 2.0) kept += 1
+          }
+          Iterator.single(kept)
+        }
+        .reduce(_ + _)
+    }
+    val narrowSec = narrowSpread.head
+    // scorer probe: the M4 fan-out over the corpus replicated to ~100k docs
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val nDocs = docs.count()
+    val copies = math.max(1, (100000 / math.max(nDocs, 1L)).toInt)
+    // ONE crossJoin with a copy index (a per-copy union's plan dominated
+    // the probe at sf0.001). The text is perturbed per copy, or Catalyst
+    // pushes the stats below the join and scores each unique doc once.
+    val bigDocs = docs.crossJoin(
+        spark.range(copies).select(col("id").as("copy_i")))
+      .withColumn("doc_id", col("doc_id") + col("copy_i") * lit(10000000L))
+      .withColumn("text", concat(col("text"), lit(" c"), col("copy_i")))
+      .drop("copy_i")
+    val scoredDocs = nDocs * copies
+    def scorerPlan(in: DataFrame) = {
+      val withC = graft.operators.Scorers.withFieldStats(
+        in, "c", col("text"), keepTh = true)
+      val staged = graft.operators.Scorers.withFieldStats(
+        withC, "t", substring(col("text"), 1, 80))
+      staged
+        .withColumn("th", col("c_th"))
+        .withColumn("raw", graft.operators.Scorers.rawEmbeddingFromHashes(col("th"), 16))
+        .select(col("doc_id"), col("c_pos"), col("c_neg"), col("t_pos"),
+          col("t_neg"), element_at(col("raw"), 1).as("e0"))
+        .filter(col("c_pos").isNotNull)
+    }
+    scorerPlan(docs.limit(500)).count() // warm codegen/planning
+    val scorerSpread = spreadOf { scorerPlan(bigDocs).count() }
+    val scorerSec = scorerSpread.head
+    // kNN probe: brute-force top-10 cosine over 1e5 persisted synthetic
+    // vectors at 768 dims — scan+score+top-k, not the sin() generation.
+    // (id+1): row 0 must not be the all-zero vector, on which the exact
+    // recall pass's SQL `cosine` throws under ANSI mode
+    val knnN = 100000L
+    val dim = 768
+    val vecs = spark.range(knnN)
+      .select(col("id"),
+        array((0 until dim).map(d =>
+          sin((col("id") + 1).cast("double") * (d + 1) * 1e-4)): _*).as("v"))
+      .persist()
+    vecs.count() // materialize before timing
+    val qvFull = graft.operators.VectorOps.hyperplanes(1, dim, seed = 13L).head
+    // graft_dot: a 768-term literal chain either overflows Catalyst's
+    // recursion or busts the codegen method limit; see functions.DotConst
+    val dot = call_function("graft_dot", col("v"), array(qvFull.map(lit): _*))
+    def topk() = vecs.withColumn("score", dot)
+      .orderBy(desc("score"), col("id")).limit(10).collect()
+    topk() // warm codegen
+    val knnSpread = spreadOf(topk(), n = 5)
+    val knnSec = knnSpread.head
+    // graph-ANN over the same corpus: per-shard NSW build + search per
+    // call, the worst case with the build included
+    val nswCorpus = vecs
+      .withColumnRenamed("id", "vec_id").withColumnRenamed("v", "embedding")
+    val nswSpread = spreadOf {
+      graft.operators.GraphAnn.searchTopK(
+        nswCorpus, "vec_id", "embedding", qvFull, k = 10, numShards = cores).collect()
+    }
+    val nswSec = nswSpread.head
+    // persisted NSW: built once to disk, then served. The sfDir suffix
+    // keeps two bench JVMs at different SFs off each other's deletes.
+    // Every build and serve span is quiet-gated and stamped.
+    val nswIdxPath = tmpPath("graft_nsw_bench_")
+    rm(nswIdxPath)
+    val nswLoadBuild = host.waitQuiet()
+    val nswBuildSec = time {
+      graft.operators.NswIndex.buildIfAbsent(
+        nswCorpus, "vec_id", "embedding", nswIdxPath, numShards = cores)
+    }
+    // first serve pays the one-time load (scan + shard shuffle +
+    // per-executor graph reconstruction), best-of-2 with the resident
+    // state evicted per rep; steady state is a walk over resident graphs
+    def servePair(path: String): (Seq[Double], Double) = {
+      val nswServe = 4
+      val firstSpread = (1 to 2).map { _ =>
+        graft.operators.NswIndex.evictServed(path)
+        time {
+          graft.operators.NswIndex.searchTopK(spark, path, qvFull, k = 10).collect()
+        }
+      }.sorted
+      val amort = time {
+        (1 to nswServe).foreach { _ =>
+          graft.operators.NswIndex.searchTopK(spark, path, qvFull, k = 10).collect()
+        }
+      } / nswServe
+      (firstSpread, amort)
+    }
+    val nswLoadServe = host.waitQuiet()
+    val (nswFirstSpread, nswAmortSec) = servePair(nswIdxPath)
+    rm(nswIdxPath)
+    // layered HNSW, same corpus and shards: the hierarchy replaces the
+    // flat build's per-insert stride probes and per-search entry evals
+    val nswlPath = nswIdxPath + "_l"
+    rm(nswlPath)
+    val nswlLoadBuild = host.waitQuiet()
+    val nswlCpu0 = Host.cpuStat()
+    val nswlBuildSec = time {
+      graft.operators.NswIndex.buildIfAbsent(
+        nswCorpus, "vec_id", "embedding", nswlPath,
+        graft.operators.GraphAnn.Params(layered = true), numShards = cores)
+    }
+    val nswlStealBuild = Host.stealPct(nswlCpu0, Host.cpuStat())
+    val nswlLoadServe = host.waitQuiet()
+    val (nswlFirstSpread, nswlAmortSec) = servePair(nswlPath)
+    // int8-quantized layered: the reference's serving config (HNSW +
+    // scalar int8 always_ram, init_qdrant.py:51-57)
+    val nswqPath = nswIdxPath + "_i8"
+    rm(nswqPath)
+    val nswqLoadBuild = host.waitQuiet()
+    val nswqCpu0 = Host.cpuStat()
+    val nswqBuildSec = time {
+      graft.operators.NswIndex.buildIfAbsent(
+        nswCorpus, "vec_id", "embedding", nswqPath,
+        graft.operators.GraphAnn.Params(layered = true),
+        numShards = cores, quantize = true)
+    }
+    val nswqStealBuild = Host.stealPct(nswqCpu0, Host.cpuStat())
+    // build-cost guard: int8 staging must stay a small constant over the
+    // raw layered build. Armed only on a genuinely quiet box — load < 6
+    // (the waitQuiet threshold 12 is a proceed-anyway bound) AND measured
+    // steal < 0.5%, the contention load average cannot see; unreadable
+    // steal (-1) never arms.
+    if (nswlLoadBuild >= 0 && nswlLoadBuild < 6.0 &&
+        nswqLoadBuild >= 0 && nswqLoadBuild < 6.0 &&
+        nswlStealBuild >= 0 && nswlStealBuild < 0.5 &&
+        nswqStealBuild >= 0 && nswqStealBuild < 0.5 &&
+        nswqBuildSec > 5.0 * math.max(nswlBuildSec, 0.5)) {
+      record.errors("__int8_build_guard") =
+        f"int8 layered build $nswqBuildSec%.1fs > 5x raw layered " +
+          f"$nswlBuildSec%.1fs on a quiet box (steal " +
+          f"$nswlStealBuild%.2f/$nswqStealBuild%.2f%%)"
+    }
+    val (nswqFirstSpread, nswqAmortSec) = servePair(nswqPath)
+    val nswlBytes = graft.operators.NswIndex.graphBytes(spark, nswlPath)
+    val nswqBytes = graft.operators.NswIndex.graphBytes(spark, nswqPath)
+    // recall@10 of the layered serves against the exact cosine top-10,
+    // mean over 8 query hyperplanes, at two beam widths. The sin corpus
+    // is adversarial for graph navigation (aliasing puts near-identical
+    // similarity mass in far-apart id regions), so ef=32 reads low here
+    // while the same serve path measures 1.0 on the real embeddings
+    // (ann_recall.v8b_nsw); ef=512 shows the knob that buys it back.
+    val recallQs = graft.operators.VectorOps.hyperplanes(8, dim, seed = 13L)
+      .zipWithIndex.map { case (q, i) => (i.toLong, q) }
+    val exactByQ = recallQs.map { case (qid, q) =>
+      qid -> nswCorpus
+        .withColumn("s", graft.operators.VectorOps.cosine(
+          col("embedding"), typedLit(q.toSeq)))
+        .orderBy(desc("s"), col("vec_id")).limit(10)
+        .collect().map(_.getLong(0)).toSet
+    }.toMap
+    // one batched searchShards job serves all 8 queries: the per-query
+    // cost of the production (batch) serve shape
+    def recallAndSec(path: String, ef: Int): (Double, Double) = {
+      val t0 = System.nanoTime()
+      val byQ = graft.operators.NswIndex.searchShards(
+        spark, path, recallQs, kPerShard = 10, efSearch = ef)
+        .collect().groupBy(_.getLong(0))
+      val sec = (System.nanoTime() - t0) / 1e9 / recallQs.size
+      val mean = recallQs.map { case (qid, _) =>
+        byQ.getOrElse(qid, Array.empty)
+          .sortBy(r => (-r.getDouble(2), r.getLong(1)))
+          .take(10).map(_.getLong(1)).count(exactByQ(qid).contains) / 10.0
+      }.sum / recallQs.size
+      (mean, sec)
+    }
+    val (nswlRecall, nswlBatchSec) = recallAndSec(nswlPath, ef = 32)
+    val (nswlRecallWide, nswlBatchWideSec) = recallAndSec(nswlPath, ef = 512)
+    val (nswqRecall, _) = recallAndSec(nswqPath, ef = 32)
+    val (nswqRecallWide, _) = recallAndSec(nswqPath, ef = 512)
+    rm(nswlPath)
+    rm(nswqPath)
+    vecs.unpersist()
+    Some(J.obj("order" -> "pre-sweep",
+      "loadavg_start" -> J.fmt(load0, 2), "loadavg_end" -> J.fmt(Host.loadAvg(), 2),
+      "steal_pct" -> J.fmt(Host.stealPct(cpu0, Host.cpuStat()), 2),
+      "frame_rows" -> frameRows, "frame_sec" -> frameSec,
+      "frame_rows_per_s" -> (frameRows / frameSec).toLong,
+      "frame_narrow_sec" -> narrowSec,
+      "frame_narrow_rows_per_s" -> (frameRows / narrowSec).toLong,
+      "scorer_docs" -> scoredDocs, "scorer_sec" -> scorerSec,
+      "scorer_docs_per_s" -> (scoredDocs / scorerSec).toLong,
+      "knn_vectors" -> knnN, "knn_sec" -> knnSec,
+      "nsw_build_search_sec" -> nswSec,
+      "nsw_index" -> J.obj("build_sec" -> J.fmt(nswBuildSec, 3),
+        "loadavg_build" -> J.fmt(nswLoadBuild, 2),
+        "loadavg_serve" -> J.fmt(nswLoadServe, 2),
+        "first_search_sec" -> J.fmt(nswFirstSpread.head, 3),
+        "first_search_spread" -> J.spread(nswFirstSpread),
+        "query_amortized_sec" -> J.fmt(nswAmortSec, 4),
+        "rebuild_per_query_sec" -> J.fmt(nswSec, 3),
+        "layered_build_sec" -> J.fmt(nswlBuildSec, 3),
+        "layered_loadavg_build" -> J.fmt(nswlLoadBuild, 2),
+        "layered_steal_build" -> J.fmt(nswlStealBuild, 2),
+        "layered_loadavg_serve" -> J.fmt(nswlLoadServe, 2),
+        "layered_first_search_sec" -> J.fmt(nswlFirstSpread.head, 3),
+        "layered_first_search_spread" -> J.spread(nswlFirstSpread),
+        "layered_query_amortized_sec" -> J.fmt(nswlAmortSec, 4),
+        "int8_build_sec" -> J.fmt(nswqBuildSec, 3),
+        "int8_loadavg_build" -> J.fmt(nswqLoadBuild, 2),
+        "int8_steal_build" -> J.fmt(nswqStealBuild, 2),
+        "int8_first_search_sec" -> J.fmt(nswqFirstSpread.head, 3),
+        "int8_first_search_spread" -> J.spread(nswqFirstSpread),
+        "int8_query_amortized_sec" -> J.fmt(nswqAmortSec, 4),
+        "layered_bytes" -> nswlBytes, "int8_bytes" -> nswqBytes,
+        "int8_bytes_ratio" -> J.fmt(nswqBytes.toDouble / math.max(nswlBytes, 1L), 3),
+        "layered_recall10_ef32" -> J.fmt(nswlRecall, 3),
+        "layered_recall10_ef512" -> J.fmt(nswlRecallWide, 3),
+        "int8_recall10_ef32" -> J.fmt(nswqRecall, 3),
+        "int8_recall10_ef512" -> J.fmt(nswqRecallWide, 3),
+        "layered_batched_sec_ef32" -> J.fmt(nswlBatchSec, 4),
+        "layered_batched_sec_ef512" -> J.fmt(nswlBatchWideSec, 4)),
+      "spread" -> J.obj("frame" -> J.spread(frameSpread),
+        "narrow" -> J.spread(narrowSpread), "scorer" -> J.spread(scorerSpread),
+        "knn" -> J.spread(knnSpread), "nsw" -> J.spread(nswSpread))))
+  }
+
+  /** The full query sweep, each query timed on its first execution in
+    * this JVM (the probes warmed tables and codegen only). */
+  def sweep(): Option[J.Obj] = {
+    val buf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    // the sweep is mandatory, but on a box slow enough that the sweep
+    // alone crosses the deadline a partial sweep with rc 0 beats a
+    // complete one that is killed before it prints
+    var tailShed = 0
+    SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.foreach {
+      case ((name, fn), i) =>
+        if (loop.pastDeadline) tailShed += 1
+        else {
+          // labels the query's jobs for event-log attribution
+          spark.sparkContext.setJobDescription(s"sweep:$name")
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).count(); true }
+            catch { case e: Throwable => record.errors(name) = message(e); false }
+          spark.sparkContext.setJobDescription(null)
+          buf += name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        }
+        if ((i + 1) % 40 == 0) {
+          record.results = buf.toSeq
+          loop.stamp(s"sweep_${i + 1}")
+        }
+    }
+    if (tailShed > 0) {
+      record.shed = record.shed :+ s"sweep_tail_$tailShed"
+      println(J.obj("metric" -> "phase_shed", "name" -> s"sweep_tail_$tailShed",
+        "elapsed_sec" -> J.fmt(loop.elapsedSec, 1),
+        "deadline_s" -> record.deadlineSec).render)
+    }
+    record.results = buf.toSeq
+    None
+  }
+
+  // Pinned into both scaled tiers whatever their base DuckDB time: the
+  // two perennial slowest dedup queries (their sf0.1 wall is shuffle
+  // round-trip latency that should amortize with volume); q_s4, the
+  // tier's bare-scan floor instrument; q_j3/q_j3b/q_t10, whose base
+  // times flap around the 0.05 s heavy cut.
+  private val scaledPins = Seq("q_d1_minhash_lsh", "q_d5_dup_clusters",
+    "q_s4_range_scan", "q_j3_range_count", "q_j3b_range_join_general",
+    "q_t10_pii_redact")
+  // the base DuckDB times the scaled tiers pick their subset from
+  private var duckSecBase: Map[String, Double] = Map.empty
+  private var relScaled: Map[String, String] = Map.empty
+  // the committed record's x5 subset, read before any rewrite, so
+  // queries entering or leaving the heavy subset are logged
+  private val prevScaledSubset: Set[String] = try {
+    val f = new java.io.File(recordFile)
+    if (!f.exists()) Set.empty
+    else {
+      val it = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+        .path("duckdb_scaled").path("per_query_exec").fieldNames()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSet
+    }
+  } catch { case _: Throwable => Set.empty }
+
+  /** Headline DuckDB comparison (BASELINE.md "relational < 2x DuckDB"):
+    * the relational oracle SQLs timed in a DuckDB subprocess against
+    * Spark on the same parquet, both sides warm and fully materialized
+    * (collect/fetchall — a count() would let Catalyst prune projections
+    * and ORDER BYs). Skipped when tools/time_duckdb.py is absent. */
+  def duckdb(): Option[J.Obj] = {
+    if (!new java.io.File(DuckScript).exists()) return None
+    val rel = relationalOracles
+    // quiet sf0.1 sweeps take 2-4 min; the cumulative budget also
+    // shrinks to half the remaining wall so this mandatory phase cannot
+    // blow the run deadline
+    val duckBudget = math.max(120,
+      math.min(480, ((record.deadlineSec - loop.elapsedSec) / 2).toInt))
+    val duckSec = runDuckTimer(sfDir, rel, 30, duckBudget)
+    // past the deadline the remaining queries are dropped and counted
+    var deadlineDropped = 0
+    def timed(f: ((SparkSession, String) => DataFrame) => Double): Map[String, Double] =
+      duckSec.keys.toSeq.sorted.flatMap { n =>
+        SparkEntry.freshQueries.get(n).flatMap { fn =>
+          if (loop.pastDeadline) { deadlineDropped += 1; None }
+          else Some(n -> f(fn))
+        }
+      }.toMap
+    // headline: fresh lineage per rep (plan paid every rep, no memoized
+    // handle, no skipped shuffle stages), like-for-like with DuckDB
+    // re-executing fully
+    val warmSec = timed { fn =>
+      fn(spark, sfDir).collect() // warm tables/codegen once
+      bestOf(3)(fn(spark, sfDir).collect())
+    }
+    // handle-reuse serving mode: planning paid once, and re-executing the
+    // same handle may skip unchanged shuffle stages on static data, so
+    // this is a serving number, not an execution-cost isolation
+    val cachedSec = timed { fn =>
+      val df = fn(spark, sfDir)
+      df.collect() // warm: triggers analysis + codegen once
+      bestOf(3)(df.collect())
+    }
+    // execution isolation: fresh per-call time minus separately measured
+    // planning (runtime codegen compile stays on the execution side but
+    // hits Janino's cache after the first call)
+    val execSec = timed { fn =>
+      val (planT, callT) = planCall(spark, sfDir, fn, reps = 3, warm = false)
+      math.max(callT - planT, 1e-4)
+    }
+    def ratios(spark: Map[String, Double]): Seq[(String, Double)] =
+      duckSec.toSeq.collect {
+        case (n, d) if d > 0 && spark.getOrElse(n, -1.0) > 0 => n -> spark(n) / d
+      }.sortBy(_._1)
+    // heavy = DuckDB itself does >= 50 ms: both engines measure
+    // execution, not Spark's fixed ~0.1 s planning/scheduling floor
+    def heavyOf(rs: Seq[(String, Double)]) = rs.filter { case (n, _) => duckSec(n) >= 0.05 }
+    val warmRatios = ratios(warmSec)
+    val heavy = heavyOf(warmRatios)
+    duckSecBase = duckSec
+    relScaled = rel ++ SparkEntry.oracleSql.view.filterKeys(scaledPins.contains).toMap
+    logScaledMembership()
+    def secs(m: Map[String, Double]): J =
+      J.Obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> J.fmt(v, 4) })
+    Some(J.obj(
+      // rebuilt from the parsed map, never the raw subprocess output,
+      // whose merged stderr could corrupt the JSON
+      "duck_sec" -> J.Obj(duckSec.toSeq.sortBy(_._1).map { case (k, v) => k -> J.num(v) }),
+      "spark_warm_sec" -> secs(warmSec), "spark_exec_sec" -> secs(execSec),
+      "spark_cached_sec" -> secs(cachedSec),
+      "n_compared" -> warmRatios.size, "n_deadline_dropped" -> deadlineDropped,
+      "n_duck_timed_out" -> duckSec.count(_._2 == -1.0),
+      "n_duck_budget_cut" -> duckSec.count(_._2 == -2.0),
+      "duck_total_budget_s" -> duckBudget,
+      "median_ratio" -> J.fmt(medianOf(warmRatios.map(_._2)), 3),
+      "n_heavy" -> heavy.size,
+      "median_ratio_heavy" -> J.fmt(medianOf(heavy.map(_._2)), 3),
+      "median_ratio_exec_heavy" -> J.fmt(medianOf(heavyOf(ratios(execSec)).map(_._2)), 3),
+      "median_ratio_cached_heavy" -> J.fmt(medianOf(heavyOf(ratios(cachedSec)).map(_._2)), 3),
+      "median_ratio_cached" -> J.fmt(medianOf(ratios(cachedSec).map(_._2)), 3),
+      "heavy" -> J.strs(heavy.map(_._1)),
+      "over_2x" -> J.strs(warmRatios.filter(_._2 > 2.0).map(_._1)),
+      "note" -> ("both sides fully materialize (collect/fetchall), warm, " +
+        "best-of-N. median_ratio / median_ratio_heavy (heavy = " +
+        "DuckDB >= 50ms subset) now run on FRESH lineage per rep " +
+        "(plan paid every rep, no memoized handle, no skipped " +
+        "shuffle stages — like-for-like with DuckDB re-executing " +
+        "fully; ADVICE r5). median_ratio_cached_*: explicit " +
+        "handle-reuse serving mode (planning paid once, shuffle " +
+        "stages may be reused on static data). " +
+        "median_ratio_exec_heavy: fresh lineage with separately " +
+        "measured planning time subtracted — execution vs " +
+        "execution; see duckdb_scaled for the same number at a " +
+        "larger SF where the per-job floor amortizes")))
+  }
+
+  private def heavyNames: Seq[String] =
+    (duckSecBase.toSeq.filter(_._2 >= 0.05).map(_._1) ++
+      scaledPins.filter(relScaled.contains)).distinct.sorted
+
+  /** Membership diff of the scaled heavy subset against the committed
+    * record: every entered or dropped query is listed with its reason. */
+  private def logScaledMembership(): Unit = if (prevScaledSubset.nonEmpty) {
+    val names = heavyNames
+    val dropped = (prevScaledSubset -- names.toSet).toSeq.sorted.map { n =>
+      val why = duckSecBase.get(n) match {
+        case Some(d) if d < 0.05 =>
+          f"base_duck_sec $d%.3f below the 0.05s heavy cut this run"
+        case Some(d) =>
+          f"base_duck_sec $d%.3f but excluded (not in scaled oracle set)"
+        case None => "no base oracle measurement this run"
+      }
+      J.obj("name" -> n, "reason" -> why)
+    }
+    record.blocks("scaled_subset_membership") = J.obj(
+      "prev_record_n" -> prevScaledSubset.size, "current_n" -> names.size,
+      "subset_entered" -> J.strs(names.filterNot(prevScaledSubset.contains)),
+      "subset_dropped" -> J.Arr(dropped))
+  }
+
+  /** A scaled-replica tier over the base run's heavy subset; measures that
+    * the per-job floor behind exec_heavy amortizes with data volume. */
+  def scaledTier(mult: Int, duckBudgetSec: Int): Option[J.Obj] =
+    if (relScaled.isEmpty) None
+    else scaledProofAt(spark, host, sfDir, mult, heavyNames,
+      "full_heavy_set_plus_dedup", relScaled, duckBudgetSec)
+
+  /** Measured ANN recall: mean over the 8 query points of |ANN top-5 ∩
+    * exact top-5| / 5 (per-point numbers are oracle-checked). */
+  def annRecall(): Option[J.Obj] = {
+    def meanRecall(name: String): Double = {
+      val r = SparkEntry.queries(name)(spark, sfDir)
+        .agg(avg(col("recall"))).first().getDouble(0)
+      math.rint(r * 1e6) / 1e6
+    }
+    val v4dSweep = SparkEntry.queries("q_v4d_multiprobe_sweep")(spark, sfDir)
+      .select(col("ham"), col("mean_recall")).collect()
+      .map(r => r.getAs[Number](0).intValue -> r.getDouble(1)).toMap
+    def v4dAt(h: Int): Double = math.rint(v4dSweep.getOrElse(h, -1.0) * 1e6) / 1e6
+    // the shipped (Bands, BitsPerBand) layout's candidate fraction:
+    // recall without the admitted scan cost is meaningless
+    val v4Frac = {
+      val r = SparkEntry.queries("q_v4c_band_sweep")(spark, sfDir)
+        .filter(col("n_bands") === graft.queries.VectorQueries.Bands &&
+          col("bits") === graft.queries.VectorQueries.BitsPerBand)
+        .select(col("mean_cand_frac")).first().getDouble(0)
+      math.rint(r * 1e6) / 1e6
+    }
+    val head = J.obj("v4b_lsh" -> meanRecall("q_v4b_recall"),
+      "v4_default_cand_frac" -> v4Frac,
+      "v4d_multiprobe_h1" -> v4dAt(1), "v4d_multiprobe_h2" -> v4dAt(2),
+      "v6b_ivf" -> meanRecall("q_v6b_recall"),
+      "v6d_ivf_kmeans" -> meanRecall("q_v6d_ivf_kmeans_recall"))
+    // the walk's recall is the entry sweep's (probed, 8-shard) row; the
+    // full measured matrix rides along as nsw_entry_sweep
+    val sweep = graft.queries.VectorQueries.nswEntrySweep(spark, sfDir).collect()
+    val v8b = math.rint(sweep.find(r => r.getString(0) == "probed" && r.getInt(1) == 8)
+      .map(_.getDouble(2)).getOrElse(-1.0) * 1e6) / 1e6
+    val matrix = J.Arr(sweep.toSeq.map(r => J.obj("entry" -> r.getString(0),
+      "shards" -> r.getInt(1), "mean_recall" -> r.getDouble(2),
+      "evals_per_search" -> r.getDouble(3))))
+    // donor-vs-trained PQ on degenerate-vs-clustered corpora; the
+    // IvfPqTrainedSpec pins restated as bench evidence
+    val v11b = meanRecall("q_v11b_ivfpq_recall")
+    val v11c = meanRecall("q_v11c_ivfpq_rerank_recall")
+    val v12b = meanRecall("q_v12b_ivfpq_trained_recall")
+    val v12c = meanRecall("q_v12c_ivfpq_trained_rerank")
+    Some(J.Obj(head.fields ++ Seq[(String, J)]("v8b_nsw" -> v8b,
+      "nsw_entry_sweep" -> matrix,
+      "v11b_ivfpq" -> v11b, "v11c_ivfpq_rerank" -> v11c,
+      "v12b_ivfpq_trained" -> v12b, "v12c_ivfpq_trained_rerank" -> v12c,
+      // the record itself declares which IVFADC config serves and which
+      // rows are instrumentation, with this run's recalls as evidence
+      "pq_serve_mode_default" -> J.obj(
+        "mode" -> "trained codebook + exact top-L rerank",
+        "rule" -> ("PQ serves only with corpus-trained codebooks and a " +
+          "constant-L exact rerank; donor-codebook rows (v11b/v11c) are " +
+          "recall-floor instrumentation, never a serve config"),
+        "evidence" -> (s"this run recall@10: donor ADC $v11b, donor+rerank " +
+          s"$v11c, trained ADC $v12b, trained+rerank $v12c; bytes: " +
+          "ivf_index.pq_bytes_ratio (~0.06x raw cells)"),
+        "serve_cost" -> "O(probed cells + L) per query"))))
+  }
+
+  /** Persisted IVF: build once, serve many, against the in-plan
+    * rebuild-per-query path; int8 and PQ cell variants with their bytes. */
+  def ivfIndex(): Option[J.Obj] = {
+    import graft.operators.IvfIndex
+    val e = graft.sources.Tables.embeddings(spark, sfDir)
+    val k = graft.queries.VectorQueries.ivfK(e.count())
+    val np = graft.queries.VectorQueries.ivfNprobe(k)
+    val cents = e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
+    val path = tmpPath("graft_ivf_bench_")
+    rm(path)
+    val loadBuild = host.waitQuiet()
+    val buildCpu0 = Host.cpuStat()
+    val buildSec = time { IvfIndex.buildIfAbsent(e, cents, path) }
+    val stealBuild = Host.stealPct(buildCpu0, Host.cpuStat())
+    val nQ = 10
+    // one warm search per variant: the first pays the one-time codegen
+    // compile, which inside a 10-rep loop flipped the pq-vs-int8 order
+    def warmServe(p: String): Unit =
+      IvfIndex.searchTopK(spark, p,
+        graft.queries.VectorQueries.QueryVec, nprobe = np, k = 5).collect()
+    // best-of-3 amortized reps behind the quiet gate
+    def amortOf(p: String): Double =
+      (1 to 3).map { _ =>
+        time {
+          (1 to nQ).foreach { _ =>
+            IvfIndex.searchTopK(spark, p,
+              graft.queries.VectorQueries.QueryVec, nprobe = np, k = 5).collect()
+          }
+        } / nQ
+      }.min
+    val loadServe = host.waitQuiet()
+    warmServe(path)
+    val amortSec = amortOf(path)
+    // batched serving (q_v6g): 12 queries through one partition-pruned
+    // scan + broadcast probe join + per-qid k-heap
+    val batchQs = graft.operators.VectorOps
+      .hyperplanes(12, graft.queries.VectorQueries.Dim, seed = 3L)
+      .zipWithIndex.map { case (q, i) => (i.toLong, q) }
+    IvfIndex.searchTopKBatch(spark, path, batchQs, nprobe = np, k = 5)
+      .collect() // warm (codegen + probe selection)
+    val loadBatch = host.waitQuiet()
+    val batchSec = time {
+      IvfIndex.searchTopKBatch(spark, path, batchQs, nprobe = np, k = 5).collect()
+    } / batchQs.size
+    val rebuildSec = bestOf(5) {
+      // freshQueries: the comparator must re-plan and re-derive the
+      // assignment, not hit the surface's plan memo
+      SparkEntry.freshQueries("q_v6_ivf_ann")(spark, sfDir).collect()
+    }
+    val qPath = path + "_q"
+    rm(qPath)
+    val qLoadBuild = host.waitQuiet()
+    val qBuildCpu0 = Host.cpuStat()
+    val qBuildSec = time { IvfIndex.buildIfAbsent(e, cents, qPath, quantize = true) }
+    val qStealBuild = Host.stealPct(qBuildCpu0, Host.cpuStat())
+    // int8-vs-raw build-cost guard, armed as the NSW one: quiet load
+    // (< 6) AND measured steal < 0.5% in both build phases
+    if (loadBuild >= 0 && loadBuild < 6.0 &&
+        qLoadBuild >= 0 && qLoadBuild < 6.0 &&
+        stealBuild >= 0 && stealBuild < 0.5 &&
+        qStealBuild >= 0 && qStealBuild < 0.5 &&
+        qBuildSec > 5.0 * math.max(buildSec, 0.5)) {
+      record.errors("__ivf_int8_build_guard") =
+        f"ivf int8 build $qBuildSec%.1fs > 5x raw $buildSec%.1fs on a " +
+          f"quiet box (steal $stealBuild%.2f/$qStealBuild%.2f%%)"
+    }
+    warmServe(qPath)
+    val qAmortSec = amortOf(qPath)
+    // PQ (IVFADC): S=8 one-byte residual codes per vector; its recall
+    // cost is ann_recall.v11b
+    val pqPath = path + "_pq"
+    rm(pqPath)
+    val pqLoadBuild = host.waitQuiet()
+    val pqBuildSec = time { IvfIndex.buildPqIfAbsent(e, cents, pqPath) }
+    warmServe(pqPath)
+    val pqAmortSec = amortOf(pqPath)
+    IvfIndex.searchTopKBatch(spark, pqPath, batchQs, nprobe = np, k = 5)
+      .collect() // warm the gp-indexed ADC batch plan
+    val pqLoadBatch = host.waitQuiet()
+    val pqBatchSec = time {
+      IvfIndex.searchTopKBatch(spark, pqPath, batchQs, nprobe = np, k = 5).collect()
+    } / batchQs.size
+    val rawBytes = IvfIndex.cellBytes(spark, path)
+    val qBytes = IvfIndex.cellBytes(spark, qPath)
+    val pqBytes = IvfIndex.cellBytes(spark, pqPath)
+    // batched per-query cost leads: batch serving is the production shape
+    Some(J.obj("batch_size" -> batchQs.size,
+      "batched_query_sec" -> J.fmt(batchSec, 4),
+      "pq_batched_query_sec" -> J.fmt(pqBatchSec, 4),
+      "loadavg_serve" -> J.fmt(loadServe, 2), "loadavg_batch" -> J.fmt(loadBatch, 2),
+      "pq_loadavg_batch" -> J.fmt(pqLoadBatch, 2),
+      "loadavg_build" -> J.fmt(loadBuild, 2), "steal_build" -> J.fmt(stealBuild, 2),
+      "int8_loadavg_build" -> J.fmt(qLoadBuild, 2),
+      "int8_steal_build" -> J.fmt(qStealBuild, 2),
+      "pq_loadavg_build" -> J.fmt(pqLoadBuild, 2),
+      "build_sec" -> J.fmt(buildSec, 3),
+      "query_amortized_sec" -> J.fmt(amortSec, 4),
+      "rebuild_per_query_sec" -> J.fmt(rebuildSec, 4),
+      "cell_bytes_raw" -> rawBytes, "cell_bytes_int8" -> qBytes,
+      "int8_bytes_ratio" -> J.fmt(qBytes.toDouble / math.max(rawBytes, 1L), 3),
+      "int8_build_sec" -> J.fmt(qBuildSec, 3),
+      "int8_query_amortized_sec" -> J.fmt(qAmortSec, 4),
+      "cell_bytes_pq" -> pqBytes,
+      "pq_bytes_ratio" -> J.fmt(pqBytes.toDouble / math.max(rawBytes, 1L), 3),
+      "pq_build_sec" -> J.fmt(pqBuildSec, 3),
+      "pq_query_amortized_sec" -> J.fmt(pqAmortSec, 4)))
+  }
+
+  /** `mults` from an env ladder knob, default 1,5,25. */
+  private def ladder(env: String): Seq[Int] =
+    sys.env.getOrElse(env, "1,5,25").split(",").map(_.trim.toInt).toSeq
+
+  /** The MinHash/LSH family's linear-scaling claim, measured. The corpus
+    * grows with distinct documents: each replica's text runs through a
+    * different consonant-rotation `translate`, which rewrites most
+    * 3-shingles, so cross-replica Jaccard falls below the 0.5 gate and
+    * pairs grow ~mult-fold like real corpus growth (a suffix-only
+    * perturbation measured C(mult,2) duplicate blowup instead).
+    * Signatures are materialized before timing, so the timed span is
+    * banding, hot-bucket cap, bucket self-join, rejoin and filter. */
+  def dedupScaled(): Option[J.Obj] = {
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text"))
+    val baseDocs = docs.count()
+    val alpha = "etaoinshrdlu"
+    val beta = "bcfgmpwyvk"
+    def corpusAt(mult: Int) =
+      if (mult == 1) docs
+      else (0 until mult).map { rep =>
+        // two independent rotations give 12 * 10 = 120 distinct maps,
+        // so every mult <= 120 keeps cross-replica Jaccard collapsed
+        val rotA = alpha.drop(rep % alpha.length) + alpha.take(rep % alpha.length)
+        val b = (rep / alpha.length) % beta.length
+        val rotB = beta.drop(b) + beta.take(b)
+        docs.select(
+          (col("doc_id") + lit(rep * 50000000L)).as("doc_id"),
+          (if (rep == 0) col("text")
+           else translate(translate(col("text"), alpha, rotA), beta, rotB)).as("text"))
+      }.reduce(_ unionByName _)
+    def timeAt(mult: Int): (Double, Long) = {
+      val sigs = graft.queries.DedupQueries.sigTable(
+        corpusAt(mult), s"bench.dedup.x$mult")
+      sigs.count() // materialize signatures outside the timed span
+      var pairs = 0L
+      val sec = (1 to 2).map(_ => time {
+        pairs = graft.queries.DedupQueries.lshPairs(sigs)
+          .filter(col("est_jaccard") >= 0.5).count()
+      }).min
+      (sec, pairs)
+    }
+    // discarded warm run: the first lshPairs execution in the JVM pays
+    // codegen and banding warmup that later multiples do not
+    timeAt(1)
+    val pts = ladder("SPARK_GRAFT_DEDUP_MULTS").map(m => m -> timeAt(m))
+    val s1 = pts.head._2._1
+    Some(J.Obj(Seq[(String, J)]("base_docs" -> baseDocs) ++
+      pts.flatMap { case (m, (s, p)) =>
+        Seq[(String, J)](s"x${m}_sec" -> J.fmt(s, 3), s"x${m}_pairs" -> p) } ++
+      pts.tail.map { case (m, (s, _)) => s"ratio_x$m" -> J.fmt(s / math.max(s1, 1e-9), 2) }))
+  }
+
+  /** A persisted synthetic corpus of `n` distinct vectors (a per-dim
+    * frequency ramp) and its corpus-locality query: the formula at
+    * virtual id 10000. A random hyperplane query's exact top-10 on the
+    * ramp are near-ties that int8 noise reorders; this one has
+    * well-separated neighbors, and because the corpora are nested the
+    * exact top-10 is the same set at every ladder point. (id+1): no
+    * all-zero row, on which the ANSI SQL cosine throws. */
+  private def rampCorpus(n: Long, dim: Int): (DataFrame, Seq[Double]) = {
+    val e = spark.range(n).select(col("id").as("vec_id"),
+      array((0 until dim).map(d =>
+        sin((col("id") + 1).cast("double") * (d * 7 + 3) * 1e-4)): _*).as("embedding"))
+    (e, (0 until dim).map(d => math.sin(10001.0 * (d * 7 + 3) * 1e-4)))
+  }
+
+  private def exactTop10(e: DataFrame, qv: Seq[Double]): Set[Long] =
+    e.withColumn("score", graft.operators.VectorOps.cosine(col("embedding"), typedLit(qv)))
+      .orderBy(desc("score"), col("vec_id")).limit(10).select("vec_id")
+      .collect().map(_.getLong(0)).toSet
+
+  /** IVF serve scaling: the int8 index on nested ramp corpora at each
+    * ladder point, served at a FIXED nprobe. ivfK keeps mean cell size
+    * at ~TargetCellRows, so a fixed-nprobe serve touches the same rows
+    * at any corpus size and should read ~flat; x*_probed certifies it.
+    * Centroid seeds are stratified (every (n/k)-th vector) so cells stay
+    * evenly populated; recall@10 vs exact is stamped per point. */
+  def annScaled(): Option[J.Obj] = {
+    import graft.operators.IvfIndex
+    val dim = graft.queries.VectorQueries.Dim
+    val servNprobe = 8
+    case class AnnPoint(n: Long, kCells: Long, buildSec: Double,
+      amortSec: Double, probed: Long, recall10: Double)
+    def timeAt(mult: Int): AnnPoint = {
+      val n = 20000L * mult
+      val (ramp, qv) = rampCorpus(n, dim)
+      val e = ramp.withColumn("label", (col("vec_id") % 10).cast("int")).persist()
+      e.count()
+      val k = graft.queries.VectorQueries.ivfK(n)
+      val stride = math.max(1L, n / k)
+      val cents = e.filter(col("vec_id") % stride === 0)
+        .select((col("vec_id") / stride).cast("long").as("cent_id"),
+          col("embedding").as("cvec"))
+      val kCells = cents.count()
+      val path = tmpPath(s"graft_annscaled_x${mult}_")
+      rm(path)
+      val buildSec = time { IvfIndex.buildIfAbsent(e, cents, path, quantize = true) }
+      // the build's load tail swung serve_ratio_x25 1.09-1.76 ungated
+      host.waitQuiet()
+      // first serve pays centroid-cache load; amortized is the number
+      val approxIds = IvfIndex.searchTopK(spark, path, qv, nprobe = servNprobe, k = 10)
+        .collect().map(_.getLong(0)).toSet
+      val nQ = 10
+      val amort = time {
+        (1 to nQ).foreach { _ =>
+          IvfIndex.searchTopK(spark, path, qv, nprobe = servNprobe, k = 10).collect()
+        }
+      } / nQ
+      val probed = IvfIndex.probedRows(spark, path, qv, servNprobe)
+      val recall = approxIds.intersect(exactTop10(e, qv)).size / 10.0
+      e.unpersist()
+      rm(path)
+      AnnPoint(n, kCells, buildSec, amort, probed, recall)
+    }
+    timeAt(1) // discard: codegen + parquet-reader warmup
+    val pts = ladder("SPARK_GRAFT_ANN_MULTS").map(m => m -> timeAt(m))
+    val a1 = pts.head._2.amortSec
+    Some(J.Obj(Seq[(String, J)]("dim" -> dim, "nprobe" -> servNprobe) ++
+      pts.flatMap { case (m, p) => Seq[(String, J)](
+        s"x${m}_n" -> p.n, s"x${m}_cells" -> p.kCells,
+        s"x${m}_build_sec" -> J.fmt(p.buildSec, 3),
+        s"x${m}_serve_sec" -> J.fmt(p.amortSec, 4),
+        s"x${m}_probed" -> p.probed,
+        s"x${m}_probed_frac" -> J.fmt(p.probed.toDouble / p.n, 4),
+        s"x${m}_recall10" -> J.fmt(p.recall10, 2)) } ++
+      pts.tail.map { case (m, p) => s"serve_ratio_x$m" -> J.fmt(p.amortSec / math.max(a1, 1e-9), 2) }))
+  }
+
+  /** Graph-index serve scaling: the reference's actual serving config
+    * (HNSW, init_qdrant.py:45-50) on the same nested ramp corpora, layered
+    * build, fixed ef. first_sec re-pays the per-executor graph load;
+    * serve is the resident-graph amortized number. */
+  def nswScaled(): Option[J.Obj] = {
+    import graft.operators.NswIndex
+    // SPARK_GRAFT_NSW_DIM=768 measures the reference's serving regime
+    // (init_qdrant.py:41); the default is the 64-d synthetic corpus
+    val dim = sys.env.get("SPARK_GRAFT_NSW_DIM").map(_.trim.toInt)
+      .getOrElse(graft.queries.VectorQueries.Dim)
+    val ef = 64
+    case class NswPoint(n: Long, buildSec: Double, firstSec: Double,
+      amortSec: Double, recall10: Double, bytes: Long, residentBytes: Long)
+    // a build group holds its shard graphs in heap at once, so the
+    // per-shard row budget shrinks with dim (~16k rows/shard at 768-d
+    // peaked ~45 GB for a 32-shard group); at 64-d every ladder point
+    // keeps the cores-shards single-group shape
+    val shardRowBudget = math.max(20000L, 15000000L / dim)
+    def timeAt(mult: Int, quantize: Boolean = false): NswPoint = {
+      val n = 20000L * mult
+      val numShards = ((((n + shardRowBudget - 1) / shardRowBudget)
+        + cores - 1) / cores * cores).toInt.max(cores)
+      val (ramp, qv) = rampCorpus(n, dim)
+      val e = ramp.persist()
+      e.count()
+      val path = tmpPath(s"graft_nswscaled_x${mult}${if (quantize) "_q" else ""}_")
+      rm(path)
+      host.waitQuiet()
+      val buildSec = time {
+        NswIndex.buildIfAbsent(e, "vec_id", "embedding", path,
+          graft.operators.GraphAnn.Params(layered = true),
+          numShards = numShards, quantize = quantize, buildGroupShards = cores)
+      }
+      host.waitQuiet()
+      val firstSec = (1 to 2).map { _ =>
+        NswIndex.evictServed(path)
+        time { NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef).collect() }
+      }.min
+      val nQ = 10
+      // GC first + best-of-3 batches: a batch right after a many-core
+      // build samples the collector's debt from its transient rows
+      System.gc()
+      val amort = (1 to 3).map { _ =>
+        time {
+          (1 to nQ).foreach { _ =>
+            NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef).collect()
+          }
+        } / nQ
+      }.min
+      val annIds = NswIndex.searchTopK(spark, path, qv, k = 10, efSearch = ef)
+        .collect().map(_.getLong(0)).toSet
+      val recall = annIds.intersect(exactTop10(e, qv)).size / 10.0
+      val bytes = NswIndex.graphBytes(spark, path)
+      // resident footprint while the shards are still cached (int8
+      // serves hold q8+scale natively)
+      val residentBytes = NswIndex.residentBytesFor(path)
+      e.unpersist()
+      // drop this point's resident state before the next: at 768-d one
+      // x100 point holds ~25 GB and accumulating points OOMs the JVM
+      NswIndex.evictServed(path)
+      rm(path)
+      NswPoint(n, buildSec, firstSec, amort, recall, bytes, residentBytes)
+    }
+    timeAt(1) // discard: codegen + reader warmup
+    val pts = ladder("SPARK_GRAFT_NSW_MULTS").map(m => m -> timeAt(m))
+    // SPARK_GRAFT_NSW_INT8=<mult>[,...]: extra int8-payload points at
+    // those mults (the reference's HNSW + scalar int8 serving config)
+    val int8Pts = sys.env.getOrElse("SPARK_GRAFT_NSW_INT8", "")
+      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+      .map(m => m -> timeAt(m, quantize = true))
+    val a1 = pts.head._2.amortSec
+    // int8 is the default serve representation once raw vector payload
+    // (n*dim*8 B) exceeds ~4 GiB per executor; evidence from this run's
+    // int8 points when it has them, else the archived 768-d ladder
+    val evidence = int8Pts.lastOption.flatMap { case (m, p) =>
+      pts.find(_._1 == m).map { case (_, raw) =>
+        f"x$m $dim%d-d (this run): int8 ${p.bytes.toDouble / math.max(raw.bytes, 1L)}%.2fx bytes, " +
+          f"serve ${p.amortSec}%.4fs vs raw ${raw.amortSec}%.4fs, recall@10 ${p.recall10}%.2f"
+      }
+    }.getOrElse("archived x100 768-d ladder (bench_nsw_scaled_768d.json): " +
+      "int8 0.13x bytes, serve parity 0.0695s vs 0.0693s, recall@10 1.00")
+    Some(J.Obj(Seq[(String, J)]("dim" -> dim, "ef" -> ef,
+        "serve_mode_default" -> J.obj("rule" -> "int8 once n*dim*8B > 4GiB/executor",
+          "dim" -> dim, "raw_payload_cap_vectors" -> 4294967296L / (dim.toLong * 8),
+          "evidence" -> evidence, "raw_role" -> "build geometry + exact rerank")) ++
+      pts.flatMap { case (m, p) => Seq[(String, J)](
+        s"x${m}_n" -> p.n, s"x${m}_build_sec" -> J.fmt(p.buildSec, 3),
+        s"x${m}_first_sec" -> J.fmt(p.firstSec, 3),
+        s"x${m}_serve_sec" -> J.fmt(p.amortSec, 4),
+        s"x${m}_recall10" -> J.fmt(p.recall10, 2),
+        s"x${m}_resident_bytes" -> p.residentBytes) } ++
+      int8Pts.flatMap { case (m, p) =>
+        // raw_bytes only when the raw ladder measured this mult: a
+        // literal 0 would read as infinite compression
+        pts.find(_._1 == m).map(r => s"x${m}_raw_bytes" -> J.num(r._2.bytes)) ++
+        Seq[(String, J)](s"x${m}_int8_bytes" -> p.bytes,
+          s"x${m}_int8_build_sec" -> J.fmt(p.buildSec, 3),
+          s"x${m}_int8_first_sec" -> J.fmt(p.firstSec, 3),
+          s"x${m}_int8_serve_sec" -> J.fmt(p.amortSec, 4),
+          s"x${m}_int8_recall10" -> J.fmt(p.recall10, 2),
+          s"x${m}_int8_resident_bytes" -> p.residentBytes) } ++
+      pts.tail.map { case (m, p) => s"serve_ratio_x$m" -> J.fmt(p.amortSec / math.max(a1, 1e-9), 2) }))
+  }
+
+  /** Production ingest shape: a checkpointed parquet file-source stream
+    * in real micro-batches (AvailableNow honoring maxFilesPerTrigger, 16
+    * files in batches of 4), as end-to-end events/s for (a) the X1/X8
+    * watermarked tumbling aggregation into the noop sink and (b) the X2
+    * incremental tick ([[graft.streaming.IncrementalTick]]) including
+    * its sink reads and writes. It runs late on purpose: at this event
+    * count the cost is per-batch planning and codegen, which needs a hot
+    * JVM (pre-sweep it measured 4-6k events/s vs 26-31k here); the
+    * stamped loadavg_start carries the contention caveat. */
+  def streamingTp(): Option[J.Obj] = {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = tmpPath("graft_streambench_")
+    rm(root)
+    val inDir = root + "/in"
+    graft.sources.Tables.events(spark, sfDir)
+      .select(col("event_id"), col("ts"), col("ts_ns"), col("user_id"), col("value"))
+      .repartition(16).write.parquet(inDir)
+    val staged = spark.read.parquet(inDir)
+    val n = staged.count()
+    val sch = staged.schema
+    def fileStream = spark.readStream.schema(sch)
+      .option("maxFilesPerTrigger", 4).parquet(inDir)
+    val loadStream = Host.loadAvg()
+    // batch counts are observed from the progress log, not assumed
+    def runToEnd(start: => org.apache.spark.sql.streaming.StreamingQuery): (Double, Int) = {
+      val t0 = System.nanoTime()
+      val q = start
+      q.awaitTermination()
+      val sec = (System.nanoTime() - t0) / 1e9
+      (sec, q.recentProgress.count(_.numInputRows > 0))
+    }
+    val (aggSec, aggBatches) = runToEnd {
+      fileStream
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 hour"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
+        .writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", root + "/ckpt_agg")
+        .trigger(Trigger.AvailableNow()).start()
+    }
+    graft.streaming.IncrementalTick.Phases.reset()
+    val (tickSec, tickBatches) = runToEnd {
+      graft.streaming.IncrementalTick.startStream(
+        fileStream, root + "/tick_sink", root + "/ckpt_tick", Trigger.AvailableNow())
+    }
+    // where the tick time goes: in-stream probe vs append accumulated
+    // over the batches (the rest is micro-batch machinery), plus a
+    // post-hoc split of ONE append job's read -> kernel -> write by
+    // timing each prefix and differencing
+    val tickProbeSec = graft.streaming.IncrementalTick.Phases.probeSec
+    val tickAppendSec = graft.streaming.IncrementalTick.Phases.appendSec
+    val tickSinkPath = root + "/tick_sink"
+    val tickCols = Seq("event_id", "ts", "ts_ns", "user_id", "value")
+    val maxTsNs = spark.read.parquet(tickSinkPath)
+      .agg(max(col("ts_ns"))).first().getLong(0)
+    def tickTail = graft.streaming.IncrementalTick
+      .prunedSlice(spark, tickSinkPath, maxTsNs,
+        graft.streaming.IncrementalTick.Lookback.toLong)
+      .select(tickCols.map(col): _*)
+    val decompReadSec = time { tickTail.count() }
+    // aggregate the kernel OUTPUTS: a bare count() lets Catalyst prune
+    // the kernels and times another tail read
+    val decompKernelTotal = time {
+      graft.streaming.IncrementalTick.enrich(tickTail)
+        .agg(sum(col("sma30")), sum(col("bb_up")), sum(col("bb_lo")),
+          count(when(col("buy"), 1)))
+        .collect()
+    }
+    val decompWriteTotal = time {
+      graft.streaming.IncrementalTick.enrich(tickTail)
+        .write.mode("overwrite").parquet(root + "/decomp_out")
+    }
+    val tickRows = spark.read.parquet(tickSinkPath).count()
+    rm(root)
+    Some(J.obj("n_events" -> n,
+      "agg_batches" -> aggBatches, "tick_batches" -> tickBatches,
+      "agg_sec" -> J.fmt(aggSec, 3),
+      "agg_events_per_s" -> (n / math.max(aggSec, 1e-9)).toLong,
+      "tick_sec" -> J.fmt(tickSec, 3),
+      "tick_events_per_s" -> (n / math.max(tickSec, 1e-9)).toLong,
+      "tick_probe_sec" -> J.fmt(tickProbeSec, 3),
+      "tick_append_sec" -> J.fmt(tickAppendSec, 3),
+      "tick_harness_sec" -> J.fmt(math.max(tickSec - tickProbeSec - tickAppendSec, 0.0), 3),
+      "tick_decomp_tail_read_sec" -> J.fmt(decompReadSec, 3),
+      "tick_decomp_kernel_sec" -> J.fmt(math.max(decompKernelTotal - decompReadSec, 0.0), 3),
+      "tick_decomp_write_sec" -> J.fmt(math.max(decompWriteTotal - decompKernelTotal, 0.0), 3),
+      "tick_sink_rows" -> tickRows,
+      "loadavg_start" -> J.fmt(loadStream, 2)))
+  }
+
+  /** The whole oracled surface re-gated at the x10 replica ("sf1"):
+    * Verify.dump in-process, then a check_oracle.py subprocess whose
+    * DuckDB results are memoized per corpus and SQL. The subprocess is
+    * hard-bounded by the remaining wall: its output drains on a daemon
+    * thread and expiry kills it and stamps timed_out. */
+  def sf1Sweep(): Option[J.Obj] = {
+    val t0 = System.nanoTime()
+    def wallSec = J.fmt((System.nanoTime() - t0) / 1e9, 1)
+    val checkScript = java.nio.file.Paths.get("tools/check_oracle.py")
+    if (!java.nio.file.Files.exists(checkScript))
+      throw new IllegalStateException(
+        s"check_oracle.py not found at ${checkScript.toAbsolutePath}")
+    val scaledDir = graft.sources.ScaledTables.ensure(spark, sfDir, 10)
+    val outDir = java.nio.file.Files.createTempDirectory("graft_sf1sweep").toString
+    val nQueries = Verify.dump(spark, scaledDir, outDir)
+    val proc = new ProcessBuilder("python3", "tools/check_oracle.py", scaledDir, outDir)
+      .redirectErrorStream(true).start()
+    val outBuf = new scala.collection.mutable.ArrayBuffer[String]()
+    val reader = new Thread(() => {
+      val src = scala.io.Source.fromInputStream(proc.getInputStream)
+      try src.getLines().foreach(l => outBuf.synchronized(outBuf += l))
+      finally src.close()
+    }, "sf1-sweep-oracle-drain")
+    reader.setDaemon(true)
+    reader.start()
+    val budgetSec = math.min(1800L,
+      math.max(120L, (record.deadlineSec - loop.elapsedSec).toLong))
+    if (!proc.waitFor(budgetSec, java.util.concurrent.TimeUnit.SECONDS)) {
+      proc.destroyForcibly()
+      Some(J.obj("scaled_dir" -> scaledDir, "n_queries" -> nQueries,
+        "timed_out" -> true, "oracle_budget_sec" -> budgetSec, "wall_sec" -> wallSec))
+    } else {
+      val rc = proc.exitValue()
+      reader.join(5000)
+      val outLines = outBuf.synchronized(outBuf.toList)
+      val m = """(\d+) ok, (\d+) failed of (\d+)""".r.findFirstMatchIn(
+        outLines.reverse.find(_.contains("oracled queries")).getOrElse(""))
+      Some(J.Obj(Seq[(String, J)]("scaled_dir" -> scaledDir,
+          "n_queries" -> nQueries, "check_rc" -> rc) ++
+        m.toSeq.flatMap(mm => Seq[(String, J)]("n_ok" -> J.Num(mm.group(1)),
+          "n_failed" -> J.Num(mm.group(2)), "n_oracled" -> J.Num(mm.group(3)))) ++
+        Seq[(String, J)](
+          "fails" -> J.strs(outLines.filter(_.startsWith("FAIL")).take(10).map(_.take(120))),
+          "wall_sec" -> wallSec)))
+    }
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ScaledTables, Tables}
 
 /** The scaled-SF replication instrument must itself be sound, or the
-  * amortization proof (Bench `duckdb_scaled`, ScaleProof) measures the
+  * amortization proof (Bench `duckdb_scaled`, `Probe scale`) measures the
   * wrong workload: replicas are DISJOINT copies (FK pairs shift
   * together, joins scale linearly, never quadratically), dimensions are
   * not replicated, and regeneration is marker-gated. */
